@@ -12,26 +12,44 @@ Iceberg catalog — see :func:`iceberg_merge_sql`)::
     WHEN MATCHED THEN UPDATE SET *
     WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *
 
-Physical plan (SnapshotTable path, no Iceberg jar in the sandbox):
+Physical plan (SnapshotTable path) —
+two passes over the window, the probe and the merge:
 
-1. LWW-dedup the window to one winner per key (map-side combinable
-   aggregate — skew-immune, see ``operators.dedup``).
-2. Bucket-prune: collect the ≤``num_buckets`` distinct bucket ids the
-   batch touches; read ONLY those buckets of the target.  Merge cost
-   is proportional to the batch footprint, not table size — the
-   property that keeps a 10^10-row table mergeable.
+1. **Window probe** (``lineage.probe_window``): one small aggregate
+   job grouped by ``(spark_partition_id(), bucket)``.  Its ≤
+   partitions × buckets rows give the driver the lineage rows (written
+   with pyarrow, no Spark job), the event count, the ``(op_ts, lsn)``
+   high watermark and the affected-bucket list.  Drivers that need
+   the watermark before the merge run the probe themselves and pass
+   it in, so each window is probed exactly once.
+2. **Bucket-prune**: read ONLY the affected buckets of the target.
+   Merge cost is proportional to the batch footprint, not table size
+   — the property that keeps a 10^10-row table mergeable.
 3. **Version-aware apply**: every stored row carries its version
    vector ``(_op_ts, _lsn)`` and a ``_deleted`` tombstone flag; the
-   merge is ``union(target, winners) → max(struct(version, row))``
-   per key.  This makes apply **commutative and idempotent across
-   batches** — a stale event delivered late (distributed file tails
-   do not guarantee LSN-ordered delivery across micro-batches) can
-   never overwrite a newer row, and a tombstone blocks resurrection
-   by an older insert.  The reference gets the same end state only by
-   assuming strictly ordered delivery (QueryConstants.java:72-73,80 +
-   sequential ElasticWriter); that assumption does not survive a
-   parallel tail, so the order-dependence is engineered out here.
-4. Atomically swap the affected buckets.
+   merge is ``union(target, raw batch events) → max(struct(version,
+   row))`` per key.  This makes apply **commutative and idempotent
+   across batches** — a stale event delivered late (distributed file
+   tails do not guarantee LSN-ordered delivery across micro-batches)
+   can never overwrite a newer row, and a tombstone blocks
+   resurrection by an older insert.  The reference gets the same end
+   state only by assuming strictly ordered delivery
+   (QueryConstants.java:72-73,80 + sequential ElasticWriter); that
+   assumption does not survive a parallel tail, so the
+   order-dependence is engineered out here.
+4. **Single-exchange write**: the unaggregated union is clustered by
+   bucket (the one shuffle of the merge), and the LWW fold runs after
+   that exchange, grouped by ``(_bucket, *key_cols)`` — the bucket
+   clustering already satisfies that grouping, so there is no second
+   shuffle.  The write then swaps the affected buckets atomically,
+   one file per bucket, in ``min(buckets, defaultParallelism)`` tasks.
+
+Skew bound: with no map-side combine before the exchange, a hot key's
+raw events all fold inside its bucket's write task.  That task's input
+is bounded by the bucket's stored rows plus the window's events, and
+the window is bounded by ``max_events_per_window`` in the runner
+(``max_files_per_trigger`` files in the stream), so a hot key costs at
+most one window of events in one task.
 
 Exactly-once: the committed-batch ledger inside the snapshot makes a
 replayed ``foreachBatch`` delivery a no-op (SURVEY.md §7.3).
@@ -45,14 +63,14 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cwds_jobs_spark.lineage import write_lineage
+from cwds_jobs_spark.lineage import WindowProbe, probe_window, write_lineage
 from cwds_jobs_spark.operators.dedup import lww_dedup
 from cwds_jobs_spark.schema import OP_DELETE
 from cwds_jobs_spark.table.evolve import merge_schemas
-from cwds_jobs_spark.table.snapshot import SnapshotTable, _align
+from cwds_jobs_spark.table.snapshot import BUCKET_COL, SnapshotTable, _align
 
 VERSION_TS = "_op_ts"
 VERSION_LSN = "_lsn"
@@ -69,6 +87,7 @@ def merge_apply(
     lineage_dir: str | None = None,
     drop_deletes: bool = False,
     watermark: "tuple | dict | None" = None,
+    probe: WindowProbe | None = None,
 ) -> dict:
     """Apply one change window; returns per-batch stats.
 
@@ -77,13 +96,20 @@ def merge_apply(
     (jobs-facilities-cws/.../QueryConstants.java:42,50 — ``!= 'D'``).
 
     ``batch_df`` MUST be deterministic across re-evaluation: the
-    affected-bucket probe and the merge are two separate jobs over it
-    (a file-backed or persisted frame qualifies; anything sampled or
-    wall-clock-dependent does not).  A row that re-evaluates into an
-    unclaimed bucket would still be committed via the per-bucket
-    fallback in ``overwrite_buckets`` but bypasses bucket pruning.
-    Callers on the hot path (runner, streaming driver) pass persisted
-    or parquet-backed windows, so no persist is forced here.
+    window probe and the merge are the two passes over it (see the
+    module docstring), and the merge reads only the buckets the probe
+    saw.  A row that re-evaluates into an unclaimed bucket would still
+    be committed (``overwrite_buckets`` records every bucket it wrote)
+    but bypasses bucket pruning.  Callers on the hot path (runner,
+    streaming driver) pass persisted or parquet-backed windows, so no
+    persist is forced here.
+
+    ``probe`` is the caller's :func:`~cwds_jobs_spark.lineage.probe_window`
+    of ``batch_df`` (with this table's ``bucket_of()``); without it the
+    window is probed here.  It cannot be combined with
+    ``drop_deletes``, which changes the window after the caller's probe.
+    The returned stats carry the probe's ``events`` and ``high``
+    watermark.
 
     ``watermark`` is the window's ``(op_ts, lsn)`` high watermark; it
     is recorded atomically WITH the ledger entry.  A ledger-skipped
@@ -96,6 +122,8 @@ def merge_apply(
     dict instead; the ledger then carries one watermark column per
     source (reference CapUsersSavePoint.java:9-47 vector analog).
     """
+    if probe is not None and drop_deletes:
+        raise ValueError("a caller's probe cannot describe a drop_deletes window")
     if batch_id <= table.committed_batch(job_id):
         return {
             "skipped": True,
@@ -118,34 +146,30 @@ def merge_apply(
 
     if drop_deletes:
         batch_df = batch_df.filter(F.col("op") != OP_DELETE)
-
-    stats = (
-        write_lineage(batch_df, lineage_dir, job_id, batch_id)
-        if lineage_dir
-        else {"events": None}
-    )
-
-    # affected-bucket probe: partial-agg distinct over ≤num_buckets
-    # values — a near-free scan, no payload shuffle
-    bucket = table.bucket_of()
-    affected = sorted(
-        r["b"]
-        for r in batch_df.select(bucket.alias("b")).distinct().collect()
-    )
+    if probe is None:
+        probe = probe_window(batch_df, table.bucket_of())
+    if lineage_dir:
+        write_lineage(probe, lineage_dir, job_id, batch_id)
+    stats = {
+        "skipped": False,
+        "batch_id": batch_id,
+        "events": probe.events,
+        "high": probe.high,
+    }
+    affected = probe.buckets
     if not affected:
         table.record_ledger(job_id, batch_id, watermark=wm)
-        return {"skipped": False, "batch_id": batch_id, "events": 0, **stats}
+        return {**stats, "bucket_rows": 0, "affected_buckets": 0}
 
     # batch events in table shape + version vector + tombstone flag.
     # NO pre-dedup pass: the per-key LWW over (target ∪ raw batch)
     # below subsumes it — max(struct) over the union picks the same
-    # winner, in ONE payload shuffle instead of two (the map-side
-    # partial combine is what used to be the lww_dedup stage).
+    # winner, in ONE payload shuffle instead of two.
     payload_cols = [
         c for c in batch_df.columns
         if c not in table.key_cols and c not in ("op", "op_ts", "lsn")
     ]
-    winners = batch_df.select(
+    events = batch_df.select(
         *table.key_cols,
         *payload_cols,
         F.col("op_ts").alias(VERSION_TS),
@@ -154,16 +178,15 @@ def merge_apply(
     )
 
     cur_schema = table.schema
-    merged = merge_schemas(cur_schema, winners.schema)
+    merged = merge_schemas(cur_schema, events.schema)
     evolved = merged is not cur_schema
 
     target = table.read(affected, include_internal=True)
-    combined = _align(target, merged).unionByName(_align(winners, merged))
+    combined = _align(target, merged).unionByName(_align(events, merged))
 
-    # per-key LWW across (target ∪ batch): one hash aggregate with
-    # map-side partial combine — commutative, skew-immune (a hot key's
-    # events reduce inside each input partition before the shuffle).
-    # Legacy rows without a version vector rank lowest.
+    # per-key LWW across (target ∪ batch), run by overwrite_buckets
+    # after its bucket exchange.  Legacy rows without a version vector
+    # rank lowest.
     non_key = [f.name for f in merged.fields if f.name not in table.key_cols]
     packed = F.max(
         F.struct(
@@ -172,36 +195,36 @@ def merge_apply(
             *[F.col(c) for c in non_key],
         )
     )
-    from pyspark.sql import Observation
-
     obs = Observation(f"merge-{job_id}-{batch_id}")
-    result = (
-        combined.groupBy(*table.key_cols)
-        .agg(packed.alias("_w"))
-        .select(
-            *table.key_cols,
-            *[F.col(f"_w.{c}").alias(c) for c in non_key],
+
+    def lww_fold(clustered: DataFrame) -> DataFrame:
+        return (
+            clustered.groupBy(BUCKET_COL, *table.key_cols)
+            .agg(packed.alias("_w"))
+            .select(
+                BUCKET_COL,
+                *table.key_cols,
+                *[F.col(f"_w.{c}").alias(c) for c in non_key],
+            )
+            .observe(obs, F.count(F.lit(1)).alias("n_keys"))
         )
-        .observe(obs, F.count(F.lit(1)).alias("n_keys"))
-    )
 
     table.overwrite_buckets(
-        result,
+        combined,
         affected,
         new_schema=merged if evolved else None,
         ledger_update={job_id: batch_id},
         ledger_watermark={job_id: wm} if wm is not None else None,
+        fold=lww_fold,
     )
     return {
-        "skipped": False,
-        "batch_id": batch_id,
+        **stats,
         # rows now in the rewritten buckets — batch winners PLUS the
         # untouched keys that happened to live in the same buckets
         # (collected during the write via observe(), no extra pass).
-        # NOT the batch event count; use the lineage stats for that.
+        # NOT the batch event count; that is ``events``.
         "bucket_rows": obs.get["n_keys"],
         "affected_buckets": len(affected),
-        **stats,
     }
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from cwds_jobs_spark import state as st
+from cwds_jobs_spark.lineage import probe_window
 from cwds_jobs_spark.operators.merge import merge_apply
 from cwds_jobs_spark.schema import TRANSCRIPTS_SCHEMA
 from cwds_jobs_spark.sources.changes import read_changes
@@ -106,10 +107,8 @@ class CdcJobRunner:
         )
         # persist mid-load savepoint BEFORE finalizer: a crash between
         # merge and finalize leaves mode=INITIAL_* → INITIAL_RESUME
-        if stats.get("max_lsn") is not None:
-            container.savepoint = st.SavePoint(
-                ts=stats["watermark_ts"], lsn=stats["max_lsn"]
-            )
+        if stats.get("high") is not None:
+            container.savepoint = st.SavePoint(*stats["high"])
         container.job_mode = st.INITIAL_LOAD
         container.batch_id = batch_id
         self.sp_svc.write(container)
@@ -211,12 +210,10 @@ class CdcJobRunner:
                 # (usually empty → terminates)
             window = pending.persist()
             try:
-                probe = window.agg(
-                    F.max(F.struct(F.col("op_ts"), F.col("lsn"))).alias("m"),
-                    F.count(F.lit(1)).alias("n"),
-                ).collect()[0]
-                hi, n_window = probe["m"], int(probe["n"])
-                if hi is None:
+                # the window's one bookkeeping pass: watermark, count,
+                # lineage rows and affected buckets; merge_apply reuses it
+                probe = probe_window(window, tbl.bucket_of())
+                if probe.high is None:
                     if planned:
                         # an empty PLANNED window (savepoint restored
                         # past this boundary, or a footer-stats
@@ -233,7 +230,8 @@ class CdcJobRunner:
                     job_id=self.cfg.job_id,
                     batch_id=batch_id,
                     lineage_dir=self.cfg.lineage_dir,
-                    watermark=(hi["op_ts"], hi["lsn"]),
+                    watermark=probe.high,
+                    probe=probe,
                 )
                 if stats.get("skipped"):
                     # a prior run committed this batch_id to the table
@@ -280,17 +278,15 @@ class CdcJobRunner:
                     while boundaries and boundaries[0] <= container.savepoint.ts:
                         boundaries.pop(0)
                     continue
-                container.savepoint = st.SavePoint(ts=hi["op_ts"], lsn=hi["lsn"])
+                container.savepoint = st.SavePoint(*probe.high)
                 container.batch_id = batch_id
                 self.sp_svc.write(container)
-                # events = rows in this window, counted in the same
-                # probe aggregate as the high watermark (one pass over
-                # the persisted window; merge's bucket_rows stat counts
-                # ALL rows in rewritten buckets, which over-counts on a
-                # populated table)
-                total["events"] += n_window
+                # events = rows in this window, from the probe (merge's
+                # bucket_rows stat counts ALL rows in rewritten buckets,
+                # which over-counts on a populated table)
+                total["events"] += probe.events
                 total["windows"] += 1
-                reporter.update(n_window)
+                reporter.update(probe.events)
             finally:
                 window.unpersist()
             if not cap:

@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from cwds_jobs_spark.lineage import probe_window
 from cwds_jobs_spark.operators.merge import merge_apply
 from cwds_jobs_spark.schema import TRANSCRIPTS_SCHEMA
 from cwds_jobs_spark.sources.changes import stream_changes
@@ -123,18 +124,20 @@ def start_cdc_stream(
     def apply_batch(batch_df, epoch_id: int) -> None:
         if on_batch is not None:
             on_batch(batch_df, epoch_id)
-        # persist: merge_apply runs two jobs over the batch (affected-
-        # bucket probe + merge) — caching guarantees both see the same
-        # rows (determinism contract, see merge_apply docstring) and
-        # stops the file source being scanned twice per micro-batch
+        # persist: the window probe and the merge are two passes over
+        # the batch — caching guarantees both see the same rows
+        # (determinism contract, see merge_apply docstring) and stops
+        # the file source being scanned twice per micro-batch
         batch_df = batch_df.persist()
         try:
+            probe = probe_window(batch_df, table.bucket_of())
             stats = merge_apply(
                 table,
                 batch_df,
                 job_id=job_id,
                 batch_id=epoch_id,
                 lineage_dir=lineage_dir,
+                probe=probe,
             )
             if lineage_dir and not stats.get("skipped"):
                 reporter.update(stats.get("events") or 0)
@@ -145,18 +148,15 @@ def start_cdc_stream(
                 and epoch_id > 0
                 and epoch_id % maintenance_every == 0
             ):
-                from pyspark.sql import functions as F
-
                 from cwds_jobs_spark.operators.merge import compact_tombstones
                 from cwds_jobs_spark.table.maintenance import (
                     compact_buckets,
                     vacuum,
                 )
 
-                wm = batch_df.agg(F.max("op_ts")).collect()[0][0]
-                if wm is not None:
+                if probe.high is not None:
                     lateness = allowed_lateness or dt.timedelta(hours=1)
-                    compact_tombstones(table, wm - lateness)
+                    compact_tombstones(table, probe.high[0] - lateness)
                 compact_buckets(table, max_files_per_bucket=4)
                 # GC superseded commit dirs so a long-running tail's
                 # disk footprint stays bounded (ElasticsearchService.

@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cwds_jobs_spark.table.xxhash64 import spark_xxhash64
+
 BUCKET_COL = "_bucket"
 FORMAT_VERSION = 1
 # physical-only helper column written next to the data (never part of
@@ -201,6 +203,11 @@ class SnapshotTable:
     def bucket_of(self, col: str | None = None):
         return bucket_expr(self.num_buckets, col or self.key_cols[0])
 
+    def bucket_of_key(self, key_value: "str | None") -> int:
+        """The bucket of one key value, computed on the driver (the same
+        id :meth:`bucket_of` gives in Spark, with no Spark job)."""
+        return spark_xxhash64(key_value) % self.num_buckets
+
     def bucket_meta(self) -> dict[int, dict]:
         """Per-bucket snapshot metadata (schema_id, files, and — when
         recorded at write time — ``tomb`` tombstone stats)."""
@@ -264,14 +271,7 @@ class SnapshotTable:
         per-id entity fetch, ChangedEntityService.java:11-20 — but the
         plan reads 1/num_buckets of the table, not an index probe).
         """
-        row = (
-            self.spark.createDataFrame(
-                [(key_value,)], f"{self.key_cols[0]} string"
-            )
-            .select(self.bucket_of().alias("b"))
-            .collect()[0]
-        )
-        return self.read([int(row["b"])]).filter(
+        return self.read([self.bucket_of_key(key_value)]).filter(
             F.col(self.key_cols[0]) == key_value
         )
 
@@ -286,6 +286,7 @@ class SnapshotTable:
         ledger_update: dict[str, int] | None = None,
         ledger_watermark: dict[str, dict] | None = None,
         write_tasks_per_bucket: int = 1,
+        fold=None,
     ) -> None:
         """Atomically replace ``affected`` buckets with ``df``'s rows.
 
@@ -294,67 +295,29 @@ class SnapshotTable:
         their existing files untouched (this is what makes MERGE cost
         proportional to the batch, not the table).
 
-        Rows are clustered by bucket id before the write: without
-        this, every upstream task holding rows for a bucket opens its
-        own file there — ``tasks × buckets`` small files per commit,
-        which at scale dominates scan and commit cost.  One extra
-        shuffle buys one file per bucket (Iceberg's
-        ``write.distribution-mode=hash``).  ``write_tasks_per_bucket``
-        > 1 salts the clustering for huge buckets so several tasks
-        (and files) share the write of one bucket.
+        ``fold`` (the MERGE path) is applied to the rows AFTER they are
+        clustered by bucket; it must group by ``(_bucket, *key_cols)``
+        and keep ``_bucket``.  That grouping is already satisfied by the
+        bucket clustering, so the fold and the write share the commit's
+        single exchange.  See :meth:`_write_buckets` for the layout.
         """
         snap = {k: (dict(v) if isinstance(v, dict) else v) for k, v in self._snap.items()}
         snap["version"] = self.version + 1
-        schema = new_schema or self.schema
-        sid = self._intern_schema(snap, schema)
-
-        commit_dir = f"data/commit-{snap['version']:09d}-{uuid.uuid4().hex[:8]}"
-        abs_dir = os.path.join(self.path, commit_dir)
-        out = df.withColumn(BUCKET_COL, self.bucket_of())
-        track_tombs = "_deleted" in df.columns and "_op_ts" in df.columns
-        if track_tombs:
-            # physical-only column (not interned into the schema
-            # catalog; reads pass an explicit .schema so it's ignored)
-            # whose footer stats make tombstone maintenance
-            # metadata-only — see TOMB_TS_COL
-            out = out.withColumn(
-                TOMB_TS_COL,
-                F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.col("_op_ts")),
-            )
-        n_parts = max(1, len(affected) or self.num_buckets) * max(
-            1, write_tasks_per_bucket
+        sid = self._intern_schema(snap, new_schema or self.schema)
+        written = self._write_buckets(
+            df,
+            snap["version"],
+            sid,
+            self.bucket_of(),
+            n_buckets=len(affected) or self.num_buckets,
+            write_tasks_per_bucket=write_tasks_per_bucket,
+            fold=fold,
         )
-        if write_tasks_per_bucket > 1:
-            salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(write_tasks_per_bucket))
-            out = out.repartition(n_parts, F.col(BUCKET_COL), salt)
-        else:
-            out = out.repartition(n_parts, F.col(BUCKET_COL))
-        (
-            out.write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(abs_dir)
-        )
-        per_bucket = _list_parquet(abs_dir, self.path)
-
-        def entry(files: list[str]) -> dict:
-            e = {"schema_id": int(sid), "files": files}
-            if track_tombs:
-                t = _tombstone_footer_stats(self.path, files)
-                if t is not None:
-                    e["tomb"] = t
-            return e
-
         for b in affected:
-            files = per_bucket.get(b, [])
-            if files:
-                snap["buckets"][str(b)] = entry(files)
-            else:
-                snap["buckets"].pop(str(b), None)
+            snap["buckets"].pop(str(b), None)
         # rows may hash to buckets the caller did not claim (shouldn't
         # happen in merge, but initial load claims all buckets)
-        for b, files in per_bucket.items():
-            if b not in affected:
-                snap["buckets"][str(b)] = entry(files)
+        snap["buckets"].update({str(b): e for b, e in written.items()})
         for k, v in (ledger_update or {}).items():
             snap["ledger"][k] = int(v)
         if ledger_watermark:
@@ -373,23 +336,71 @@ class SnapshotTable:
         snapshot swap; ledger and schema history carry over, so
         in-flight jobs resume cleanly against the new layout.
         """
-        full = self.read(include_internal=True)
         snap = {k: (dict(v) if isinstance(v, dict) else v) for k, v in self._snap.items()}
         snap["version"] = self.version + 1
         snap["num_buckets"] = int(new_num_buckets)
-        sid = str(snap["current_schema_id"])
+        written = self._write_buckets(
+            self.read(include_internal=True),
+            snap["version"],
+            str(snap["current_schema_id"]),
+            bucket_expr(new_num_buckets, self.key_cols[0]),
+            n_buckets=new_num_buckets,
+            write_tasks_per_bucket=write_tasks_per_bucket,
+        )
+        snap["buckets"] = {str(b): e for b, e in written.items()}
+        self._write_snapshot(snap)
+        self._snap = snap
 
-        commit_dir = f"data/commit-{snap['version']:09d}-{uuid.uuid4().hex[:8]}"
-        abs_dir = os.path.join(self.path, commit_dir)
-        out = full.withColumn(BUCKET_COL, bucket_expr(new_num_buckets, self.key_cols[0]))
-        track_tombs = "_deleted" in full.columns and "_op_ts" in full.columns
+    def _write_buckets(
+        self,
+        df: DataFrame,
+        version: int,
+        sid: str,
+        bucket,
+        *,
+        n_buckets: int,
+        write_tasks_per_bucket: int = 1,
+        fold=None,
+    ) -> dict[int, dict]:
+        """Write ``df`` into a fresh commit dir, one file group per
+        bucket; returns each written bucket's snapshot entry.
+
+        Rows are clustered by bucket id before the write: without
+        this, every upstream task holding rows for a bucket opens its
+        own file there — ``tasks × buckets`` small files per commit,
+        which at scale dominates scan and commit cost.  One shuffle
+        buys one file per bucket (Iceberg's
+        ``write.distribution-mode=hash``).  Each bucket lands in exactly
+        one of ``min(n_buckets, defaultParallelism)`` write tasks, so a
+        task may write several buckets but never shares one.
+        ``write_tasks_per_bucket`` > 1 salts the clustering for huge
+        buckets so several tasks (and files) share the write of one
+        bucket (not combinable with ``fold``).
+        """
+        abs_dir = os.path.join(
+            self.path, f"data/commit-{version:09d}-{uuid.uuid4().hex[:8]}"
+        )
+        out = df.withColumn(BUCKET_COL, bucket)
+        if write_tasks_per_bucket > 1:
+            salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(write_tasks_per_bucket))
+            out = out.repartition(
+                n_buckets * write_tasks_per_bucket, F.col(BUCKET_COL), salt
+            )
+        else:
+            n_tasks = min(n_buckets, self.spark.sparkContext.defaultParallelism)
+            out = out.repartition(max(1, n_tasks), F.col(BUCKET_COL))
+        if fold is not None:
+            out = fold(out)
+        track_tombs = "_deleted" in out.columns and "_op_ts" in out.columns
         if track_tombs:
+            # physical-only column (not interned into the schema
+            # catalog; reads pass an explicit .schema so it's ignored)
+            # whose footer stats make tombstone maintenance
+            # metadata-only — see TOMB_TS_COL
             out = out.withColumn(
                 TOMB_TS_COL,
                 F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.col("_op_ts")),
             )
-        n_parts = new_num_buckets * max(1, write_tasks_per_bucket)
-        out = out.repartition(n_parts, F.col(BUCKET_COL))
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(abs_dir)
 
         def entry(files: list[str]) -> dict:
@@ -400,12 +411,9 @@ class SnapshotTable:
                     e["tomb"] = t
             return e
 
-        snap["buckets"] = {
-            str(b): entry(files)
-            for b, files in _list_parquet(abs_dir, self.path).items()
+        return {
+            b: entry(files) for b, files in _list_parquet(abs_dir, self.path).items()
         }
-        self._write_snapshot(snap)
-        self._snap = snap
 
     def record_bucket_tomb_stats(self, stats: dict[int, dict]) -> None:
         """Metadata-only commit backfilling ``tomb`` tombstone stats for

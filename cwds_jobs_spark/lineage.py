@@ -49,14 +49,25 @@ class WindowProbe:
     events: int
     # (op_ts, lsn) of the window's last event; None for an empty window
     high: "tuple[dt.datetime, int] | None"
+    # per-source (op_ts, lsn) high watermarks, when probed by source
+    sources: "dict[str, tuple[dt.datetime, int]] | None" = None
 
 
-def probe_window(df: DataFrame, bucket_expr: Column) -> WindowProbe:
+def probe_window(
+    df: DataFrame, bucket_expr: Column, source_col: str | None = None
+) -> WindowProbe:
     """One ``groupBy(spark_partition_id(), bucket)`` aggregate over a
     change window, collected to the driver (≤ partitions × buckets
-    rows; map-side partial aggregation keeps the shuffle as small)."""
+    rows; map-side partial aggregation keeps the shuffle as small).
+
+    ``source_col`` (a union of several tails) joins the grouping, and
+    the probe's ``sources`` then gives each source's high watermark
+    from the same aggregate."""
+    keys = [F.spark_partition_id().alias("p"), bucket_expr.alias("b")]
+    if source_col is not None:
+        keys.append(F.col(source_col).alias("s"))
     rows = (
-        df.groupBy(F.spark_partition_id().alias("p"), bucket_expr.alias("b"))
+        df.groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.max("lsn").alias("lsn"),
@@ -72,11 +83,17 @@ def probe_window(df: DataFrame, bucket_expr: Column) -> WindowProbe:
         p[1] = max(p[1], r["lsn"])
         p[2] = max(p[2], r["ts_us"])
     his = [(r["hi"]["op_ts"], r["hi"]["lsn"]) for r in rows]
+    sources = None
+    if source_col is not None:
+        sources = {}
+        for r, hi in zip(rows, his):
+            sources[r["s"]] = max(hi, sources.get(r["s"], hi))
     return WindowProbe(
         partitions=[(pid, *parts[pid]) for pid in sorted(parts)],
         buckets=sorted({r["b"] for r in rows}),
         events=sum(r["n"] for r in rows),
         high=max(his) if his else None,
+        sources=sources,
     )
 
 
@@ -108,7 +125,12 @@ def write_lineage(
     )
     # dot-prefixed: Spark's file listing skips it until the rename
     tmp = os.path.join(d, f".{LINEAGE_FILE}.{uuid.uuid4().hex[:8]}.tmp")
-    pq.write_table(table, tmp)
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        # durable before the rename: a crash after the table commit must
+        # not leave an empty lineage file that the ledger never rewrites
+        f.flush()
+        os.fsync(f.fileno())
     final = os.path.join(d, LINEAGE_FILE)
     os.replace(tmp, final)
     for name in os.listdir(d):

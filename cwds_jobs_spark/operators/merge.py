@@ -54,16 +54,20 @@ most one window of events in one task.
 Exactly-once: the committed-batch ledger inside the snapshot makes a
 replayed ``foreachBatch`` delivery a no-op (SURVEY.md §7.3).
 
-Tombstones are compacted away by ``compact_tombstones`` once the tail
-watermark has passed them (no event with a smaller version can still
-arrive).
+Tombstones are dropped once the tail watermark minus the allowed
+lateness has passed them (no event with a smaller version can still
+arrive; :func:`dead_tombstone` is the one predicate).  Given a
+``purge_before`` bound, the LWW fold drops them while it rewrites a
+bucket anyway, so a stream that purges pays nothing extra for it;
+``compact_tombstones`` handles only the buckets no recent merge
+rewrote, and decides that from snapshot metadata.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cwds_jobs_spark.lineage import WindowProbe, probe_window, write_lineage
@@ -88,6 +92,7 @@ def merge_apply(
     drop_deletes: bool = False,
     watermark: "tuple | dict | None" = None,
     probe: WindowProbe | None = None,
+    purge_before: "dt.datetime | None" = None,
 ) -> dict:
     """Apply one change window; returns per-batch stats.
 
@@ -121,6 +126,14 @@ def merge_apply(
     A multi-source union window passes a ``{source: (op_ts, lsn)}``
     dict instead; the ledger then carries one watermark column per
     source (reference CapUsersSavePoint.java:9-47 vector analog).
+
+    ``purge_before`` drops, from the rewritten buckets, every LWW winner
+    that is a tombstone with ``_op_ts < purge_before`` (see
+    :func:`dead_tombstone`).  The filter runs after the fold and before
+    the write, so ``bucket_rows`` and the buckets' footer tombstone
+    stats describe what was written.  Only a caller that owns the
+    source's lateness contract may pass it (the stream with
+    ``maintenance_every``); without it every tombstone is kept.
     """
     if probe is not None and drop_deletes:
         raise ValueError("a caller's probe cannot describe a drop_deletes window")
@@ -169,12 +182,12 @@ def merge_apply(
         c for c in batch_df.columns
         if c not in table.key_cols and c not in ("op", "op_ts", "lsn")
     ]
-    events = batch_df.select(
-        *table.key_cols,
-        *payload_cols,
-        F.col("op_ts").alias(VERSION_TS),
-        F.col("lsn").alias(VERSION_LSN),
-        (F.col("op") == OP_DELETE).alias(TOMBSTONE),
+    # SQL strings: one JVM call per column instead of about five
+    events = batch_df.selectExpr(
+        *[_ident(c) for c in table.key_cols + payload_cols],
+        f"op_ts AS {VERSION_TS}",
+        f"lsn AS {VERSION_LSN}",
+        f"op = '{OP_DELETE}' AS {TOMBSTONE}",
     )
 
     cur_schema = table.schema
@@ -186,28 +199,26 @@ def merge_apply(
 
     # per-key LWW across (target ∪ batch), run by overwrite_buckets
     # after its bucket exchange.  Legacy rows without a version vector
-    # rank lowest.
+    # rank lowest.  The row rides in a nested struct so the winner
+    # unpacks with one ``_w.row.*`` instead of one column per field.
     non_key = [f.name for f in merged.fields if f.name not in table.key_cols]
-    packed = F.max(
-        F.struct(
-            F.coalesce(F.col(VERSION_TS), F.lit(_MIN_TS)).alias("__vt"),
-            F.coalesce(F.col(VERSION_LSN), F.lit(-1)).alias("__vl"),
-            *[F.col(c) for c in non_key],
-        )
+    packed = F.expr(
+        f"max(named_struct("
+        f"'__vt', coalesce({VERSION_TS}, TIMESTAMP'{_MIN_TS.isoformat(' ')}'), "
+        f"'__vl', coalesce({VERSION_LSN}, -1L), "
+        f"'row', struct({', '.join(_ident(c) for c in non_key)})))"
     )
     obs = Observation(f"merge-{job_id}-{batch_id}")
 
     def lww_fold(clustered: DataFrame) -> DataFrame:
-        return (
+        won = (
             clustered.groupBy(BUCKET_COL, *table.key_cols)
             .agg(packed.alias("_w"))
-            .select(
-                BUCKET_COL,
-                *table.key_cols,
-                *[F.col(f"_w.{c}").alias(c) for c in non_key],
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n_keys"))
+            .selectExpr(BUCKET_COL, *[_ident(c) for c in table.key_cols], "_w.row.*")
         )
+        if purge_before is not None:
+            won = won.filter(~dead_tombstone(purge_before))
+        return won.observe(obs, F.count(F.lit(1)).alias("n_keys"))
 
     table.overwrite_buckets(
         combined,
@@ -226,6 +237,23 @@ def merge_apply(
         "bucket_rows": obs.get["n_keys"],
         "affected_buckets": len(affected),
     }
+
+
+def _ident(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dead_tombstone(purge_before) -> Column:
+    """True (never null) for a tombstone whose version is older than
+    ``purge_before``.  Once the tail watermark minus the allowed
+    lateness has passed a tombstone's version, no event it must still
+    win against can arrive, so it is dead weight.  The merge fold
+    (``merge_apply(purge_before=…)``) and :func:`compact_tombstones`
+    drop exactly these rows."""
+    return F.coalesce(
+        F.col(TOMBSTONE) & (F.col(VERSION_TS) < F.lit(purge_before)), F.lit(False)
+    )
 
 
 def compact_tombstones(table: SnapshotTable, watermark_ts) -> int:
@@ -251,7 +279,6 @@ def compact_tombstones(table: SnapshotTable, watermark_ts) -> int:
     """
     if TOMBSTONE not in [f.name for f in table.schema.fields]:
         return 0
-    dead = F.col(TOMBSTONE) & (F.col(VERSION_TS) < F.lit(watermark_ts))
     hits: set[int] = set()
     unknown: list[int] = []
     for b, entry in table.bucket_meta().items():
@@ -295,7 +322,9 @@ def compact_tombstones(table: SnapshotTable, watermark_ts) -> int:
     buckets = sorted(hits)
     if not buckets:
         return 0
-    kept = table.read(buckets, include_internal=True).filter(~dead)
+    kept = table.read(buckets, include_internal=True).filter(
+        ~dead_tombstone(watermark_ts)
+    )
     table.overwrite_buckets(kept, buckets)
     return len(buckets)
 

@@ -74,6 +74,15 @@ def get_spark(
         # planning (sources/file_stats.py); INT64 micros restores both
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
+        # call-site capture off: with it on, every wrapped functions.* /
+        # DataFrame call also walks the Python stack and makes ~10 JVM
+        # round trips (active session, conf reads, origin set/clear) —
+        # most of a window's driver time at trickle sizes.  JVM errors
+        # still name the failing expression; only the Python file:line
+        # in the query context is lost.  PySpark caches this flag per
+        # process on first use, so it must be set here, not later via
+        # spark.conf.set.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # streaming micro-batches re-list the changes dir; keep state small
         .config("spark.sql.streaming.fileSource.log.compactInterval", "10")

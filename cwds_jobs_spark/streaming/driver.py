@@ -43,6 +43,8 @@ def _write_progress(lineage_dir: str, job_id: str, snap: dict) -> None:
     tmp = os.path.join(d, f".progress.{uuid.uuid4().hex[:8]}.tmp")
     with open(tmp, "w") as f:
         json.dump(snap, f)
+        f.flush()
+        os.fsync(f.fileno())
     # underscore prefix: the sidecar lives inside a parquet dataset
     # dir, and Spark's file listing skips only `_`/`.`-prefixed names —
     # an unprefixed name breaks every later lineage read
@@ -86,15 +88,19 @@ def start_cdc_stream(
     bench).  ``on_batch`` is a hook for fault-injection tests
     (reference BrokenTestEntityService.java:10-25 analog).
 
-    ``maintenance_every=K`` runs table maintenance after every K-th
-    applied batch: tombstones whose version is older than
-    ``max(op_ts) - allowed_lateness`` are purged (a purged tombstone
-    could otherwise be resurrected by a late stale insert, so the
-    bound must match the source's out-of-orderness contract — same
-    role as ``withWatermark``'s delay), and buckets fragmented past 4
-    file groups are compacted.  Maintenance is itself an atomic
-    snapshot commit, so a crash mid-maintenance is invisible to
-    readers.
+    ``maintenance_every=K`` purges tombstones whose version is older
+    than ``max(op_ts) - allowed_lateness`` of the batch (default
+    lateness one hour; a purged tombstone could otherwise be
+    resurrected by a late stale insert, so the bound must match the
+    source's out-of-orderness contract — same role as
+    ``withWatermark``'s delay).  Every batch's merge drops them from
+    the buckets it rewrites (``merge_apply(purge_before=…)``).  After
+    every K-th applied batch, maintenance purges the buckets no merge
+    rewrote — a metadata-only check when every bucket was — compacts
+    buckets fragmented past 4 file groups and vacuums old commits.
+    Each purge is an atomic snapshot commit, so a crash
+    mid-maintenance is invisible to readers.  Without
+    ``maintenance_every`` every tombstone is kept.
 
     Progress (reference C4, JobTimeReport/TimeLeftEstimationProvider
     analog) is ON BY DEFAULT when ``lineage_dir`` is set: each applied
@@ -120,6 +126,7 @@ def start_cdc_stream(
     src = stream_changes(
         spark, changes_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
+    lateness = allowed_lateness or dt.timedelta(hours=1)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         if on_batch is not None:
@@ -131,6 +138,13 @@ def start_cdc_stream(
         batch_df = batch_df.persist()
         try:
             probe = probe_window(batch_df, table.bucket_of())
+            # the bound maintenance purges below, applied while the merge
+            # rewrites the window's buckets anyway
+            purge_before = (
+                probe.high[0] - lateness
+                if maintenance_every and probe.high is not None
+                else None
+            )
             stats = merge_apply(
                 table,
                 batch_df,
@@ -138,6 +152,7 @@ def start_cdc_stream(
                 batch_id=epoch_id,
                 lineage_dir=lineage_dir,
                 probe=probe,
+                purge_before=purge_before,
             )
             if lineage_dir and not stats.get("skipped"):
                 reporter.update(stats.get("events") or 0)
@@ -154,9 +169,8 @@ def start_cdc_stream(
                     vacuum,
                 )
 
-                if probe.high is not None:
-                    lateness = allowed_lateness or dt.timedelta(hours=1)
-                    compact_tombstones(table, probe.high[0] - lateness)
+                if purge_before is not None:
+                    compact_tombstones(table, purge_before)
                 compact_buckets(table, max_files_per_bucket=4)
                 # GC superseded commit dirs so a long-running tail's
                 # disk footprint stays bounded (ElasticsearchService.
@@ -200,8 +214,10 @@ def start_multisource_cdc_stream(
     without a hand-rolled vector file.
 
     Each leg is tagged with a ``_source`` column.  ``foreachBatch``
-    computes per-source high watermarks from the persisted batch (one
-    tiny aggregate, ≤len(sources) rows) and records them atomically
+    probes the persisted batch once with ``_source`` in the window
+    probe's grouping, which gives the lineage rows, affected buckets
+    and count as for one source plus the per-source high watermarks,
+    and records those watermarks atomically
     WITH the ledger entry — per-source watermark columns in the
     ledger, readable via ``SnapshotTable.committed_watermark`` as
     ``{"sources": {name: {"ts", "lsn"}}}``.
@@ -251,12 +267,10 @@ def start_multisource_cdc_stream(
             on_batch(batch_df, epoch_id)
         batch_df = batch_df.persist()
         try:
-            vector = {
-                r["_source"]: (r["m"]["op_ts"], r["m"]["lsn"])
-                for r in batch_df.groupBy("_source")
-                .agg(F.max(F.struct("op_ts", "lsn")).alias("m"))
-                .collect()
-            }
+            # one aggregate: lineage rows, buckets, count and the
+            # per-source high watermarks
+            probe = probe_window(batch_df, table.bucket_of(), source_col="_source")
+            vector = dict(probe.sources)
             # a micro-batch may hold files of ONE source only (the
             # trigger's file cap applies per leg) — merge with the
             # committed vector so every source's entry stays present
@@ -288,6 +302,7 @@ def start_multisource_cdc_stream(
                 batch_id=epoch_id,
                 lineage_dir=lineage_dir,
                 watermark=vector or None,
+                probe=probe,
             )
         finally:
             batch_df.unpersist()

@@ -125,6 +125,9 @@ class SnapshotTable:
         self.spark = spark
         self.path = path
         self._snap = snap
+        # (num_buckets, col) -> bucket Column; a Column is immutable and
+        # reusable, and building one costs several JVM round trips
+        self._bucket_exprs: dict = {}
 
     # ---------------- lifecycle ----------------
 
@@ -201,7 +204,10 @@ class SnapshotTable:
         return self._snap.get("ledger_wm", {}).get(job_id)
 
     def bucket_of(self, col: str | None = None):
-        return bucket_expr(self.num_buckets, col or self.key_cols[0])
+        key = (self.num_buckets, col or self.key_cols[0])
+        if key not in self._bucket_exprs:
+            self._bucket_exprs[key] = bucket_expr(*key)
+        return self._bucket_exprs[key]
 
     def bucket_of_key(self, key_value: "str | None") -> int:
         """The bucket of one key value, computed on the driver (the same
@@ -258,9 +264,11 @@ class SnapshotTable:
             for p in parts[1:]:
                 out = out.unionByName(p)
         if not include_internal:
-            if "_deleted" in out.columns:
-                out = out.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            internal = [c for c in out.columns if c.startswith("_")]
+            internal = [f.name for f in cur.fields if f.name.startswith("_")]
+            if "_deleted" in internal:
+                # a SQL string is one JVM call; the same predicate built
+                # from Column objects costs about ten
+                out = out.filter("_deleted IS NOT TRUE")
             if internal:
                 out = out.drop(*internal)
         return out
@@ -398,8 +406,7 @@ class SnapshotTable:
             # whose footer stats make tombstone maintenance
             # metadata-only — see TOMB_TS_COL
             out = out.withColumn(
-                TOMB_TS_COL,
-                F.when(F.coalesce(F.col("_deleted"), F.lit(False)), F.col("_op_ts")),
+                TOMB_TS_COL, F.expr("CASE WHEN _deleted THEN _op_ts END")
             )
         out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(abs_dir)
 
@@ -511,9 +518,16 @@ def _align_col(col, src: T.DataType, dst: T.DataType):
 
 def _align(df: DataFrame, target: T.StructType) -> DataFrame:
     """Null-fill missing columns and align/cast to the target schema
-    (recursively for nested struct payloads)."""
+    (recursively for nested struct payloads).  ``df`` itself is returned
+    when its columns already match the target's names and types, in
+    order — only evolved file groups pay for the projection."""
+    fields = df.schema.fields
+    if [(f.name, f.dataType) for f in fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
     cols = []
-    have = {f.name: f for f in df.schema.fields}
+    have = {f.name: f for f in fields}
     for f in target.fields:
         if f.name in have:
             cols.append(

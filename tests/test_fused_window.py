@@ -12,12 +12,18 @@ from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from cwds_jobs_spark import state as st
-from cwds_jobs_spark.lineage import probe_window, read_lineage, write_lineage
+from cwds_jobs_spark.lineage import (
+    WindowProbe,
+    probe_window,
+    read_lineage,
+    write_lineage,
+)
 from cwds_jobs_spark.operators.merge import merge_apply
 from cwds_jobs_spark.oracle import assert_matches, replay
 from cwds_jobs_spark.runner import CdcJobRunner, JobConfig
 from cwds_jobs_spark.schema import TRANSCRIPTS_SCHEMA
 from cwds_jobs_spark.sources.changes import read_changes, write_changes_window
+from cwds_jobs_spark.streaming.driver import _write_progress
 from cwds_jobs_spark.synth import synth_changes
 from cwds_jobs_spark.table.maintenance import bucket_file_counts
 from cwds_jobs_spark.table.snapshot import SnapshotTable
@@ -69,6 +75,34 @@ def test_replayed_lineage_write_leaves_one_file(spark, ws):
     assert len(os.listdir(d)) == 1
     lin = read_lineage(spark, ws["lineage"])
     assert lin.agg(F.sum("events_applied")).collect()[0][0] == 300
+
+
+def test_sidecar_files_are_fsynced_before_rename(tmp_path, monkeypatch):
+    """The lineage file and the progress sidecar reach the disk before
+    they are renamed into place: a crash after the table commit cannot
+    leave an empty lineage file that the ledger never rewrites."""
+    log = []
+    fsync, replace = os.fsync, os.replace
+
+    def recording_fsync(fd):
+        log.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        fsync(fd)
+
+    def recording_replace(src, dst):
+        log.append(("replace", os.path.realpath(src)))
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    monkeypatch.setattr(os, "replace", recording_replace)
+    probe = WindowProbe(
+        partitions=[(0, 3, 9, 1_700_000_000_000_000)], buckets=[1], events=3, high=None
+    )
+    write_lineage(probe, str(tmp_path), "j", 0)
+    _write_progress(str(tmp_path), "j", {"events": 3})
+    renames = [i for i, (op, _p) in enumerate(log) if op == "replace"]
+    assert len(renames) == 2
+    for i in renames:
+        assert ("fsync", log[i][1]) in log[:i], log
 
 
 def _capture_writes(monkeypatch) -> list:

@@ -6,11 +6,8 @@ is the DuckDB-equivalent ANSI SQL over the same parquet views.
 Column names/aliases match pairwise; floats are rounded identically on
 both sides.  Ops whose inputs aren't SQL-expressible (xxhash64 shingle
 hashes, simhash signatures, the synthesized CDC tail) use the
-side-file oracle pattern (see the section comment below).  The
-deliberately-approximate ANN variants (ann_lsh, ann_ivf with nprobe <
-n_centroids) are oracled on RECALL vs the exact top-k: the approximate
-result ships through a side file and both engines score it, asserting
-the recall floor — every query now has a full rows+schema+hash check.
+side-file oracle pattern (see the section comment below), so every
+query has a full rows+schema+hash check.
 """
 
 from __future__ import annotations
@@ -618,26 +615,6 @@ WHERE ({quality}) >= 0.5
 """
 
 
-def q_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k vs the vec_id=0 embedding."""
-    from cwds_jobs_spark.operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return brute_force_topk(emb, list(query), k=10)
-
-
-_SQL_COSINE = """
-WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id,
-       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(q.embedding AS DOUBLE[])), 6) AS cosine
-FROM embeddings e, q
-ORDER BY cosine DESC, e.vec_id
-LIMIT 10
-"""
-
-
 # ---------------- side-file-oracled / rows-only ops -------------------------
 #
 # Side-file oracle pattern: ops whose *inputs* aren't SQL-expressible
@@ -720,177 +697,6 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
 FROM s a JOIN s b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 """
-
-
-def q_ann_exact_multiquery(spark, sf_dir):
-    """Exact multi-query top-k: broadcast query block + per-partition
-    GEMM (the brute-force baseline all ANN variants are judged
-    against)."""
-    from cwds_jobs_spark.operators.similarity import topk_for_queries
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = [
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    return topk_for_queries(emb, qs, k=10)
-
-
-_SQL_ANN_EXACT = """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 3)
-SELECT query_id, vec_id, cosine FROM (
-  SELECT q.query_id, e.vec_id,
-         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) AS cosine,
-         row_number() OVER (
-           PARTITION BY q.query_id
-           ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) DESC,
-                    e.vec_id
-         ) AS rn
-  FROM embeddings e CROSS JOIN q
-) WHERE rn <= 10
-"""
-
-
-def q_ann_ivf_exhaustive(spark, sf_dir):
-    """IVF machinery run with nprobe == n_centroids: scans every cell,
-    so the result must EQUAL exact top-k — a correctness gate for the
-    centroid assignment + cell-join + scoring plumbing."""
-    from cwds_jobs_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = [
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    return ivf_topk(emb, qs, k=10, n_centroids=8, nprobe=8)
-
-
-def q_embedding_near_dups(spark, sf_dir):
-    """Embedding-cosine near-dup PAIR mining (LSH-bucketed self-join
-    candidates + exact native cosine verify); params chosen for
-    effectively-exact recall at this threshold, so the result equals
-    the O(n²) DuckDB oracle."""
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    # threshold 0.4 yields ~59 true pairs on this corpus (max pair
-    # cosine is 0.513 — the synthetic embeddings carry no planted
-    # dups); 2-bit × 24-table LSH puts miss probability per true pair
-    # at ~5e-6, so the mined set equals the exact O(n²) oracle.
-    # max_bucket is exactness-tuned (never drop a bucket) like the
-    # minhash oracle; corpus-scale calls use the capped default.
-    return embedding_near_dups(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4, n_bits=2,
-        num_tables=24, max_bucket=1_000_000,
-    )
-
-
-_SQL_EMB_DUPS = """
-SELECT id_a, id_b, cosine FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                      CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-) WHERE cosine >= 0.4
-"""
-
-
-def _ann_recall(spark, sf_dir, approx_df, side_name: str, bound: float):
-    """Recall-vs-exact harness for the approximate ANN variants: the
-    (deterministic, seeded) approximate top-k is written to a parquet
-    side file, then scored against the exact top-k — per query,
-    recall = |approx ∩ exact| / k.  The DuckDB twin recomputes the
-    exact set itself and reads the SAME side file, so rows+schema+hash
-    must match; ``meets_bound`` asserts the recall floor in the hard
-    signal (round-2 left these two as weaker rows-only checks)."""
-    from cwds_jobs_spark.operators.similarity import topk_for_queries
-
-    p = _side_path(sf_dir, side_name)
-    approx_df.write.mode("overwrite").parquet(p)
-    approx = spark.read.parquet(p).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = [
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    exact = topk_for_queries(emb, qs, k=10).select("query_id", "vec_id")
-    return (
-        exact.join(approx, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(10.0), 3
-            ).alias("recall")
-        )
-        .select(
-            "query_id",
-            "recall",
-            (F.col("recall") >= F.lit(bound)).alias("meets_bound"),
-        )
-    )
-
-
-def _ann_recall_sql(side_name: str, bound: float) -> str:
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 3),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 6) DESC,
-                      e.vec_id
-           ) AS rn
-    FROM embeddings e CROSS JOIN q
-  ) WHERE rn <= 10),
-approx AS (SELECT query_id, vec_id
-           FROM read_parquet('{_ORACLE_SIDE_DIR}/{side_name}-sf0.01/*.parquet'))
-SELECT e.query_id,
-       round(count(a.vec_id) / 10.0, 3) AS recall,
-       round(count(a.vec_id) / 10.0, 3) >= {bound} AS meets_bound
-FROM exact e LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-GROUP BY e.query_id
-"""
-
-
-# recall floors: deterministic (seeded hyperplanes / seeded sample
-# centroids over a fixed parquet layout), measured 0.6/0.7/0.9 (lsh)
-# and 0.3/0.4/0.6 (ivf, nprobe=4 of 16 — the synthetic gaussian
-# corpus has no cluster structure, IVF's worst case) at sf0.01
-_LSH_RECALL_BOUND, _IVF_RECALL_BOUND = 0.5, 0.25
-
-
-def q_ann_lsh(spark, sf_dir):
-    """LSH ANN (approximate by design): recall vs exact top-k, with
-    the candidate top-k shipped through a side file so DuckDB scores
-    the identical result set."""
-    from cwds_jobs_spark.operators.similarity import lsh_bucketed_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = [
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    approx = lsh_bucketed_topk(emb, qs, k=10, n_bits=4, num_tables=8)
-    return _ann_recall(spark, sf_dir, approx, "ann_lsh_topk", _LSH_RECALL_BOUND)
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF ANN (approximate by design, nprobe=4 of 16): recall vs
-    exact top-k through the side-file pattern."""
-    from cwds_jobs_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = [
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id") < 3).collect()
-    ]
-    approx = ivf_topk(emb, qs, k=10, n_centroids=16, nprobe=4)
-    return _ann_recall(spark, sf_dir, approx, "ann_ivf_topk", _IVF_RECALL_BOUND)
 
 
 def q_fingerprint(spark, sf_dir):
@@ -1170,14 +976,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_score": q_quality_score,
         "text_stats": q_text_stats,
         "corpus_filter": q_corpus_filter,
-        "cosine_topk": q_cosine_topk,
         "minhash_near_dups": q_minhash_near_dups,
         "simhash_near_dups": q_simhash_near_dups,
-        "ann_exact_multiquery": q_ann_exact_multiquery,
-        "ann_ivf_exhaustive": q_ann_ivf_exhaustive,
-        "embedding_near_dups": q_embedding_near_dups,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
         "fingerprint": q_fingerprint,
         "multimodal_features": q_multimodal_features,
         "paged_source": q_paged_source,
@@ -1212,14 +1012,8 @@ def oracle_sql() -> dict[str, str]:
         "quality_score": _SQL_QUALITY,
         "text_stats": _SQL_TEXT_STATS,
         "corpus_filter": _corpus_filter_sql(),
-        "cosine_topk": _SQL_COSINE,
         "minhash_near_dups": _SQL_MINHASH,
         "simhash_near_dups": _SQL_SIMHASH,
-        "ann_exact_multiquery": _SQL_ANN_EXACT,
-        "ann_ivf_exhaustive": _SQL_ANN_EXACT,
-        "embedding_near_dups": _SQL_EMB_DUPS,
-        "ann_lsh": _ann_recall_sql("ann_lsh_topk", _LSH_RECALL_BOUND),
-        "ann_ivf": _ann_recall_sql("ann_ivf_topk", _IVF_RECALL_BOUND),
         "fingerprint": _SQL_FP,
         "multimodal_features": _multimodal_sql(),
         "paged_source": _SQL_PAGED,

@@ -68,7 +68,7 @@ BENCH_DIR = os.environ.get(
 )
 
 # headline subset: the operators that dominate the engine's hot path
-# (CDC LWW, joins, dedup, text pipeline, similarity) — full coverage
+# (CDC LWW, joins, dedup, text pipeline) — full coverage
 # runs in the driver's correctness pass, not here.
 HEADLINE = [
     "cdc_final_state",
@@ -87,8 +87,6 @@ HEADLINE = [
     "quality_score",
     "corpus_filter",
     "fingerprint",
-    "cosine_topk",
-    "embedding_near_dups",
     "minhash_near_dups",
     "simhash_near_dups",
     "simhash_near_dups@mh3",
@@ -141,18 +139,6 @@ def _bench_simhash_mh3(spark, sf_dir):
     return simhash_near_dups(docs, max_hamming=3, max_bucket=100)
 
 
-def _bench_embdups(spark, sf_dir):
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # corpus-scale buckets: n_bits ~ log2(rows / target_bucket) — the
-    # entry query's exactness-tuned 2-bit/24-table/uncapped config is
-    # for the 500-row oracle corpus, quadratic beyond it
-    return embedding_near_dups(
-        emb, threshold=0.4, n_bits=6, num_tables=8, max_bucket=1000
-    )
-
-
 # the near-dup entry queries write oracle side files and use
 # exactness-tuned LSH params (r=1 bands, uncapped buckets) for the
 # 500-doc driver-correctness corpus; the bench times the bare
@@ -162,7 +148,6 @@ _HEADLINE_OVERRIDES = {
     "minhash_near_dups": _bench_minhash,
     "simhash_near_dups": _bench_simhash,
     "simhash_near_dups@mh3": _bench_simhash_mh3,
-    "embedding_near_dups": _bench_embdups,
 }
 
 # parameter fingerprint per headline query, recorded in the artifact so
@@ -173,7 +158,6 @@ QUERIES_CONFIG = {
     "minhash_near_dups": "t0.5/h32/b8r4/sh3/cap50",
     "simhash_near_dups": "mh6/c8/cap200",
     "simhash_near_dups@mh3": "mh3/c4/cap100",
-    "embedding_near_dups": "t0.4/bits6/tables8/cap1000",
     "_default": "__spark_entry__ defaults @ " + os.path.basename(
         SF_DIR.rstrip("/")
     ),
@@ -1129,8 +1113,8 @@ def _headline_queries_leg() -> dict[str, float]:
 # deterministic synthetic corpus at 1x and 10x and records the observed
 # log-log slope — the evidence for the O(docs x bands) bucket-capped
 # design claim (slope ~1 = linear; an uncapped all-pairs design reads
-# ~2).  Corpora come from cwds_jobs_spark.synth.synth_docs /
-# synth_embeddings (partition-stable, planted near-dup pairs).
+# ~2).  The corpus comes from cwds_jobs_spark.synth.synth_docs
+# (partition-stable, planted near-dup pairs).
 # --------------------------------------------------------------------------
 
 DEDUP_SCALE_CONFIG = {
@@ -1141,36 +1125,10 @@ DEDUP_SCALE_CONFIG = {
     # 50k->500k step found 0 pairs order-1) — order 2 widens the key
     # space to 2^16 and is the scale-correct config for mh6
     "simhash": "mh6/c8/po2/cap200",
-    # n_bits follows the corpus-size rule the headline bench documents
-    # (n_bits ~ log2(rows / target_bucket), target ~80): LSH bucket
-    # GEOMETRY is a function of corpus size — holding n_bits fixed at
-    # 10x the corpus makes every bucket 10x bigger and the in-bucket
-    # pair count quadratic, which is a misconfiguration, not the
-    # design's cost curve.  The realized bits per scale are recorded
-    # in each leg.
-    # t0.8: at a loose threshold (t0.4) the OUTPUT itself is Theta(n^2)
-    # — random 64-dim pairs above cosine 0.4 grow with C(n,2), so any
-    # exact-output miner is output-bound and the slope measures the
-    # workload, not the engine (measured 1.45 at the 50k->500k step,
-    # with found-pairs growing 17.5x for 10x vectors).  At t0.8 the
-    # output is planted-pair dominated (~n/10 pairs at cosine ~0.99 vs
-    # random pairs at <=~0.6) and the slope isolates miner cost.
-    # vbucket: in-bucket GEMM verification — the join-verify path drags
-    # one vector per candidate row through a sort-merge join (O(cand x
-    # dim) sort bytes, measured ~37 GB at 500k vectors); bucket verify
-    # ships vectors once per bucket membership (linear) and only
-    # surviving pairs shuffle.
-    "embedding": "t0.8/bits=log2(n/80)/tables8/cap1000/vbucket",
 }
 
 
-def _emb_bits(n_vecs: int) -> int:
-    import math
-
-    return max(2, round(math.log2(max(n_vecs, 160) / 80)))
-
-
-def run_dedup_scale(n_docs: int, n_vecs: int, work_dir: str) -> dict:
+def run_dedup_scale(n_docs: int, work_dir: str) -> dict:
     """One scale point: synthesize + write the corpus (untimed source
     side), then time each miner end-to-end (mine + count).  Runs inside
     a fresh subprocess spawned by ``_dedup_scale_leg``."""
@@ -1178,60 +1136,45 @@ def run_dedup_scale(n_docs: int, n_vecs: int, work_dir: str) -> dict:
         minhash_near_dups,
         simhash_near_dups,
     )
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-    from cwds_jobs_spark.synth import synth_docs, synth_embeddings
+    from cwds_jobs_spark.synth import synth_docs
 
     spark = _session(CPUS)
     parts = int(CPUS) * 2
     docs_path = os.path.join(work_dir, f"docs_{n_docs}")
-    emb_path = os.path.join(work_dir, f"emb_{n_vecs}")
     synth_docs(spark, n_docs, num_partitions=parts).write.mode(
         "overwrite"
     ).parquet(docs_path)
-    synth_embeddings(spark, n_vecs, num_partitions=parts).write.mode(
-        "overwrite"
-    ).parquet(emb_path)
 
-    bits = _emb_bits(n_vecs)
-
-    def miners(docs, emb):
+    def miners(docs):
         return {
             "minhash": lambda: minhash_near_dups(docs, threshold=0.5),
             "simhash": lambda: simhash_near_dups(
                 docs, max_hamming=6, max_bucket=200, pigeonhole_order=2
-            ),
-            "embedding": lambda: embedding_near_dups(
-                emb, threshold=0.8, n_bits=bits, num_tables=8,
-                max_bucket=1000, verify="bucket",
             ),
         }
 
     # JIT/classload warmup on a tiny slice (untimed): steady-state per-
     # miner cost is the quantity whose slope we want
     wu_docs = spark.read.parquet(docs_path).limit(200).cache()
-    wu_emb = spark.read.parquet(emb_path).limit(200).cache()
-    for fn in miners(wu_docs, wu_emb).values():
+    for fn in miners(wu_docs).values():
         fn().count()
-    wu_docs.unpersist(), wu_emb.unpersist()
+    wu_docs.unpersist()
 
     docs = spark.read.parquet(docs_path)
-    emb = spark.read.parquet(emb_path)
     times: dict[str, float] = {}
     pairs: dict[str, int] = {}
-    for name, fn in miners(docs, emb).items():
+    for name, fn in miners(docs).items():
         t0 = time.perf_counter()
         pairs[name] = fn().count()
         times[name] = round(time.perf_counter() - t0, 3)
     return {
         "n_docs": n_docs,
-        "n_vecs": n_vecs,
-        "emb_n_bits": bits,
         "times": times,
         "pairs": pairs,
     }
 
 
-def _dedup_scale_leg(n_docs: int, n_vecs: int) -> dict:
+def _dedup_scale_leg(n_docs: int) -> dict:
     """One scale point in a FRESH subprocess (same isolation rationale
     as ``_replay_leg``), canaries recorded around it."""
     import subprocess
@@ -1242,7 +1185,7 @@ def _dedup_scale_leg(n_docs: int, n_vecs: int) -> dict:
         "import sys, json\n"
         f"sys.path.insert(0, {here!r})\n"
         "import bench\n"
-        f"r = bench.run_dedup_scale({n_docs}, {n_vecs}, {work!r})\n"
+        f"r = bench.run_dedup_scale({n_docs}, {work!r})\n"
         "print('RESULT::' + json.dumps(r))\n"
     )
     canary, bw = _canary(), _canary_bw()
@@ -1275,8 +1218,8 @@ def dedup_scale_main() -> None:
     base = int(os.environ.get("SPARK_GRAFT_DEDUP_SCALE_BASE", 5000))
     factor = int(os.environ.get("SPARK_GRAFT_DEDUP_SCALE_FACTOR", 10))
     legs = [
-        _dedup_scale_leg(base, base),
-        _dedup_scale_leg(base * factor, base * factor),
+        _dedup_scale_leg(base),
+        _dedup_scale_leg(base * factor),
     ]
     slopes = {}
     for name in DEDUP_SCALE_CONFIG:

@@ -19,18 +19,24 @@ Layout
 ------
 - ``session``     SparkSession factory (AQE, Arrow, UTC)
 - ``schema``      StructTypes for transcripts / changes / job_state / lineage
-- ``synth``       deterministic, partition-stable change-event generator
-- ``table``       bucketed snapshot table: atomic commit, schema
-                  evolution, committed-batch ledger (Iceberg-equivalent
-                  semantics; a real Iceberg catalog path is gated in
-                  ``operators.merge``)
-- ``operators``   LWW dedup, MERGE apply, doc dedup, similarity search
+- ``synth``       deterministic, partition-stable change-event and
+                  document-corpus generators
+- ``table``       bucketed snapshot table: compare-and-swap commit,
+                  schema evolution, committed-batch ledger, maintenance
+- ``operators``   LWW dedup, MERGE apply, tombstone compaction; document
+                  near-dup mining and media features (corpus queries)
 - ``functions``   vectorized text canonicalization / analysis
-- ``sources``     changes-tail readers (batch + stream), testdata loaders
-- ``streaming``   Structured Streaming driver (foreachBatch + checkpoint)
+- ``sources``     changes-tail readers (batch + stream), footer-stats
+                  window planning, paginated REST-style sources
+- ``streaming``   Structured Streaming driver (foreachBatch + checkpoint),
+                  sessionization, event-time windowed metrics
 - ``state``       savepoint container + job-mode state machine
 - ``lineage``     per-partition metrics table
+- ``multisource`` per-source savepoint vector over union tails
+- ``progress``    rows/sec + ETA reporting
 - ``runner``      initial / incremental / resume job orchestration
+- ``cli``         job entry point (``python -m cwds_jobs_spark``)
+- ``oracle``      pure-Python LWW replay the tests check tables against
 """
 
 __version__ = "0.1.0"

@@ -103,7 +103,6 @@ def run_multisource_incremental(
     windows: list[DataFrame] = []
     advanced: dict[str, SavePoint] = {}
     failed: list[str] = []
-    stats_events: dict[str, int] = {}
 
     for name, cdir in sources.items():
         sp = vec.get(name, SavePoint(ts=EPOCH_TS, lsn=-1))
@@ -113,7 +112,6 @@ def run_multisource_incremental(
             full = read_changes(spark, cdir)
             hw = source_high_watermark(full)
             if hw is None or not (sp < hw):
-                stats_events[name] = 0
                 continue  # nothing new; savepoint stays
             pending = read_changes(spark, cdir, after=sp, until=hw)
             windows.append(pending)

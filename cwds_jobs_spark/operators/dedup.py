@@ -7,30 +7,22 @@ QueryConstants.java:72-73,80) plus sequential overwriting writes
 set-oriented apply cannot rely on write order, so LWW on
 ``(op_ts, lsn)`` is made explicit here (SURVEY.md §2.4 A4).
 
-Two physical strategies:
-
-- ``lww_dedup`` (default): ``groupBy(key).agg(max(struct(op_ts, lsn,
-  op, payload…)))``.  A hash aggregate does **map-side partial
-  combine**, so a hot conversation key is reduced inside each input
-  partition before the shuffle — this is intrinsically skew-immune and
-  is what survives a 10^10-event replay.  One shuffle, no window sort.
-- ``lww_dedup_window``: the textbook salted two-level
-  ``row_number()`` pipeline (salt → per-salt rank → global rank).
-  Kept for parity with BASELINE.json's description and as the shape
-  you'd use when the full ordered history per key is needed, not just
-  the max.
+``lww_dedup``: ``groupBy(key).agg(max(struct(op_ts, lsn, op,
+payload…)))``.  A hash aggregate does **map-side partial combine**, so
+a hot conversation key is reduced inside each input partition before
+the shuffle — intrinsically skew-immune, one shuffle, no window sort.
+The merge does not call it: its in-bucket ``max(struct)`` fold over
+(target ∪ raw window) picks the same winner
+(``operators.merge.merge_apply``).  ``synth.synth_transcripts`` uses it
+to build a table with one row per key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cwds_jobs_spark.schema import KEY_COLS
-
-
-def _order_cols(df: DataFrame) -> list[str]:
-    return [c for c in df.columns if c not in KEY_COLS and c not in ("op_ts", "lsn")]
 
 
 def lww_dedup(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
@@ -50,30 +42,3 @@ def lww_dedup(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
         F.col("_w.lsn").alias("lsn"),
         *[F.col(f"_w.{c}").alias(c) for c in rest],
     ).select(*df.columns)
-
-
-def lww_dedup_window(
-    df: DataFrame,
-    key_cols: list[str] | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Salted two-level row_number LWW (BASELINE.json north_star shape).
-
-    Level 1 ranks within (key, salt) — hot keys are spread over
-    ``salt_buckets`` tasks; level 2 ranks the ≤``salt_buckets``
-    survivors per key.  Equivalent output to :func:`lww_dedup`.
-    """
-    keys = key_cols or KEY_COLS
-    salt = F.pmod(F.xxhash64(F.col("lsn")), F.lit(salt_buckets)).alias("_salt")
-    w1 = Window.partitionBy(*keys, "_salt").orderBy(
-        F.col("op_ts").desc(), F.col("lsn").desc()
-    )
-    w2 = Window.partitionBy(*keys).orderBy(F.col("op_ts").desc(), F.col("lsn").desc())
-    return (
-        df.withColumn("_salt", salt)
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") == 1)
-        .withColumn("_r2", F.row_number().over(w2))
-        .filter(F.col("_r2") == 1)
-        .drop("_salt", "_r1", "_r2")
-    )

@@ -382,10 +382,9 @@ def simhash_pairs_from_sigs(
     grow as n²/2^16 once the corpus outgrows ~2^16 rows per shard —
     sub-linear at 500k docs (slope 0.89 for a 50k→500k step), super-
     linear by 5M (1.41).  Banded simhash has no corpus-size knob
-    inside a fixed-width fingerprint (unlike minhash bands or
-    embedding-LSH ``n_bits``); past ~10⁶ rows per shard use a wider
-    fingerprint, Manku-style sorted-fingerprint probing, or prefer
-    the minhash / embedding miners."""
+    inside a fixed-width fingerprint (unlike minhash bands); past
+    ~10⁶ rows per shard use a wider fingerprint, Manku-style
+    sorted-fingerprint probing, or prefer the minhash miner."""
     if n_chunks is None:
         n_chunks = _pick_chunks(max_hamming, pigeonhole_order)
     assert pigeonhole_order in (1, 2), pigeonhole_order

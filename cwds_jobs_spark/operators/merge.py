@@ -3,8 +3,8 @@
 Semantics follow the reference's bulk writer (jobs-common/.../elastic/
 ElasticWriter.java:67-89): op I/U → full-document upsert by key,
 op D → delete by key, unknown key + D → no-op (the reference logs and
-skips, ElasticWriter.java:80-82).  Equivalent SQL (runs verbatim on an
-Iceberg catalog — see :func:`iceberg_merge_sql`)::
+skips, ElasticWriter.java:80-82).  In SQL, leaving out the version
+check of step 3 below::
 
     MERGE INTO transcripts t USING batch s
       ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx
@@ -12,8 +12,7 @@ Iceberg catalog — see :func:`iceberg_merge_sql`)::
     WHEN MATCHED THEN UPDATE SET *
     WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *
 
-Physical plan (SnapshotTable path) —
-two passes over the window, the probe and the merge:
+Physical plan — two passes over the window, the probe and the merge:
 
 1. **Window probe** (``lineage.probe_window``): one small aggregate
    job grouped by ``(spark_partition_id(), bucket)``.  Its ≤
@@ -71,7 +70,6 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cwds_jobs_spark.lineage import WindowProbe, probe_window, write_lineage
-from cwds_jobs_spark.operators.dedup import lww_dedup
 from cwds_jobs_spark.schema import OP_DELETE
 from cwds_jobs_spark.table.evolve import merge_schemas
 from cwds_jobs_spark.table.snapshot import BUCKET_COL, SnapshotTable, _align
@@ -327,43 +325,3 @@ def compact_tombstones(table: SnapshotTable, watermark_ts) -> int:
     )
     table.overwrite_buckets(kept, buckets)
     return len(buckets)
-
-
-# ---------------------------------------------------------------------------
-# Iceberg catalog path — used on a real cluster with
-# iceberg-spark-runtime on the classpath; not executable in this
-# sandbox (no jar), kept as the production MERGE implementation.
-# ---------------------------------------------------------------------------
-
-def iceberg_merge_sql(target: str, source_view: str, key_cols: list[str]) -> str:
-    on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    return f"""
-        MERGE INTO {target} t
-        USING {source_view} s
-        ON {on}
-        WHEN MATCHED AND s.op = 'D' THEN DELETE
-        WHEN MATCHED THEN UPDATE SET *
-        WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *
-    """
-
-
-def iceberg_available(spark) -> bool:
-    """True when an Iceberg SQL extension/catalog is configured."""
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    return "IcebergSparkSessionExtensions" in ext
-
-
-def merge_apply_iceberg(
-    spark, target_table: str, batch_df: DataFrame, key_cols: list[str]
-) -> None:
-    """Production path: LWW-dedup then a single atomic MERGE INTO.
-
-    Iceberg gives snapshot-atomic commit, bucket(N, conv_id) partition
-    pruning and schema merge (``write.spark.accept-any-schema`` +
-    ``mergeSchema``) natively; the SnapshotTable path above mirrors
-    those semantics 1:1 so tests here certify the same behavior.
-    """
-    deduped = lww_dedup(batch_df, key_cols)
-    view = "cdc_batch_src"
-    deduped.createOrReplaceTempView(view)
-    spark.sql(iceberg_merge_sql(target_table, view, key_cols))

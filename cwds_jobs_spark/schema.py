@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 KEY_COLS = ["conv_id", "turn_idx"]
-PAYLOAD_COLS = ["role", "text", "tool", "ts"]
 
 OP_INSERT = "I"
 OP_UPDATE = "U"
@@ -70,9 +69,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("watermark_ts", T.TimestampType(), True),
     ]
 )
-
-
-def payload_schema(schema: T.StructType) -> T.StructType:
-    """Project a changes-shaped schema down to the transcript shape."""
-    drop = {"op", "op_ts", "lsn"}
-    return T.StructType([f for f in schema.fields if f.name not in drop])

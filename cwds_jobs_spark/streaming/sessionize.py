@@ -47,10 +47,6 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _ms(ts: pd.Timestamp) -> int:
-    return int(ts.value // 1_000_000)
-
-
 def _emit(conv_id, sessions, closed_by) -> pd.DataFrame:
     return pd.DataFrame(
         {

@@ -10,7 +10,7 @@ makes the two-parallelism scaling benchmark an apples-to-apples run.
 
 Skew: ``conv_id`` is drawn log-uniform over ranks, i.e. Zipf(s≈1) —
 hot conversations exist by construction (FIXTURES.md §4), exercising
-the salted/agg-based LWW path.
+the merge's in-bucket LWW fold under skew.
 
 Scale: generation is a single ``spark.range(n)`` projection — no
 shuffle, no driver loop — so it synthesizes 10^10 events on a real
@@ -178,32 +178,4 @@ def synth_docs(
     return rng.select(
         doc.cast("long").alias("doc_id"),
         F.concat_ws(" ", *words).alias("text"),
-    )
-
-
-def synth_embeddings(
-    spark: SparkSession,
-    n_vecs: int,
-    *,
-    dim: int = 64,
-    seed: int = 13,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic embedding corpus with planted near-dup pairs
-    (vec ids ``(10k, 10k+1)`` differ by a small perturbation → cosine
-    ≈ 0.99; the rest is component-wise uniform noise).  Partition-
-    stable like :func:`synth_docs`."""
-    rng = spark.range(n_vecs, numPartitions=num_partitions)
-    vid = F.col("id")
-    pair_member = (vid % 10) == 1
-    base = F.when(pair_member, vid - 1).otherwise(vid)
-    comps = []
-    for j in range(dim):
-        c = _u(base, 300 + j, seed) - 0.5
-        c = c + F.when(
-            pair_member, (_u(vid, 400 + j, seed) - 0.5) * 0.05
-        ).otherwise(F.lit(0.0))
-        comps.append(c.cast("float"))
-    return rng.select(
-        vid.cast("long").alias("vec_id"), F.array(*comps).alias("embedding")
     )

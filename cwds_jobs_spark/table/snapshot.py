@@ -1,17 +1,20 @@
 """Bucketed snapshot table: the engine's lakehouse substrate.
 
-Semantics are Iceberg's, scoped to what the CDC engine needs — this
-sandbox ships no Iceberg runtime jar, so the MERGE target is this thin
-metadata layer over parquet instead (the ``operators.merge`` module
-also carries a real ``MERGE INTO`` SQL path that activates when an
-Iceberg catalog is configured on a cluster):
+Semantics are Iceberg's, scoped to what the CDC engine needs: a thin
+metadata layer over parquet that is the MERGE target of
+``operators.merge``.
 
 - **Atomic snapshot commit** — data files are written to a fresh
   immutable directory, then a single JSON snapshot + pointer swap
-  (``os.replace``, atomic on POSIX) publishes them.  Readers see
-  either the old or the new version, never a mix.  This is the analog
-  of the reference's atomic alias swap (jobs-common/.../elastic/
-  ElasticsearchService.java:123-147).
+  publishes them.  Readers see either the old or the new version,
+  never a mix.  This is the analog of the reference's atomic alias
+  swap (jobs-common/.../elastic/ElasticsearchService.java:123-147).
+  The snapshot JSON is published with exclusive create (``os.link``),
+  so a commit is a compare-and-swap on the version: a writer whose
+  base version is no longer current raises :class:`CommitConflict`
+  instead of overwriting the other writer's commit.  ``load`` rolls
+  forward past a ``_VERSION`` pointer that lags a published snapshot
+  (a crash between the JSON and the pointer swap).
 - **Hash-bucket layout** — rows live in ``num_buckets`` buckets by
   ``xxhash64(conv_id)``.  A change batch only rewrites the buckets its
   keys hash into (bucket pruning), so MERGE cost scales with the batch
@@ -116,6 +119,15 @@ def bucket_expr(num_buckets: int, col: str = "conv_id"):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_buckets)).cast("int")
 
 
+def _snap_name(version: int) -> str:
+    return f"snap-{version:09d}.json"
+
+
+class CommitConflict(RuntimeError):
+    """Another writer already committed the version this commit was
+    about to publish: this writer's base snapshot is stale."""
+
+
 def _schema_fingerprint(schema: T.StructType) -> str:
     return json.dumps(schema.jsonValue(), sort_keys=True)
 
@@ -159,10 +171,21 @@ class SnapshotTable:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SnapshotTable":
-        with open(os.path.join(path, "_meta", "_VERSION")) as f:
+        meta = os.path.join(path, "_meta")
+        with open(os.path.join(meta, "_VERSION")) as f:
             snap_name = f.read().strip()
-        with open(os.path.join(path, "_meta", snap_name)) as f:
-            return cls(spark, path, json.load(f))
+        with open(os.path.join(meta, snap_name)) as f:
+            snap = json.load(f)
+        # a published snapshot is complete (it is fsynced before its
+        # link), so a pointer lagging one is a commit that crashed
+        # before the pointer swap: that commit happened
+        while True:
+            nxt = os.path.join(meta, _snap_name(snap["version"] + 1))
+            if not os.path.exists(nxt):
+                break
+            with open(nxt) as f:
+                snap = json.load(f)
+        return cls(spark, path, snap)
 
     @classmethod
     def exists(cls, path: str) -> bool:
@@ -473,13 +496,22 @@ class SnapshotTable:
 
     def _write_snapshot(self, snap: dict) -> None:
         meta = os.path.join(self.path, "_meta")
-        name = f"snap-{snap['version']:09d}.json"
+        name = _snap_name(snap["version"])
         tmp = os.path.join(meta, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
         with open(tmp, "w") as f:
             json.dump(snap, f)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(meta, name))
+        try:
+            # exclusive create: the compare-and-swap on the version
+            os.link(tmp, os.path.join(meta, name))
+        except FileExistsError:
+            raise CommitConflict(
+                f"table {self.path}: version {snap['version']} was already "
+                "committed by another writer"
+            ) from None
+        finally:
+            os.remove(tmp)
         ptmp = os.path.join(meta, f"._VERSION.{uuid.uuid4().hex[:8]}.tmp")
         with open(ptmp, "w") as f:
             f.write(name)

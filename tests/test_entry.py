@@ -12,7 +12,7 @@ import __spark_entry__ as entry_mod
 SF = "/root/testdata/sf0.001"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events", "documents",
 ]
 
 

@@ -119,31 +119,3 @@ def test_minhash_verify_ships_hashed_shingles(spark):
     plan = _formatted(out)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert dict(hdf.dtypes)["sh"] == "array<bigint>"
-
-
-def test_embedding_near_dups_plan_native(spark):
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _formatted(embedding_near_dups(emb, threshold=0.9, num_tables=2))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan  # bucketed join, not cross
-
-
-def test_embedding_candidate_mining_ships_ids_only(spark):
-    """The candidate-mining stage (explode + bucket groupBy + pair
-    expansion) must never carry the embedding vectors — only
-    (table, bucket, id).  Vectors are joined back per verified pair
-    side (round-2 shipped vectors through the explode and BOTH sides
-    of the bucket self-join: O(rows × tables × dim × 2) shuffle)."""
-    from cwds_jobs_spark.operators.similarity import embedding_candidate_pairs
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cand = embedding_candidate_pairs(emb, num_tables=2)
-    assert cand.columns == ["id_a", "id_b"]  # compact output schema
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    # the Generate (explode) nodes must not ship the vector column
-    for line in plan.splitlines():
-        if "Generate" in line or "hashpartitioning" in line:
-            assert "embedding" not in line, line
-    assert "CartesianProduct" not in plan

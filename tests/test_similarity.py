@@ -1,65 +1,9 @@
-"""Similarity search: exact paths vs numpy oracle; LSH recall sanity."""
+"""Media feature plumbing: synthetic payloads through the fake decoder."""
 
-import numpy as np
 import pytest
 
 from cwds_jobs_spark.operators.multimodal import extract_features, resize_images, sample_frames, synth_media
-from cwds_jobs_spark.operators.similarity import (
-    brute_force_topk,
-    lsh_bucketed_topk,
-    topk_for_queries,
-)
 
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-def _np_topk(rows, query, k):
-    m = np.vstack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
-    ids = np.array([r.vec_id for r in rows])
-    q = np.asarray(query, dtype=np.float64)
-    sims = (m @ q) / (np.linalg.norm(m, axis=1) * np.linalg.norm(q))
-    order = np.lexsort((ids, -sims))[:k]
-    return list(ids[order])
-
-
-def test_brute_force_topk_matches_numpy(spark, emb):
-    rows = emb.collect()
-    query = list(rows[0].embedding)
-    got = [r.vec_id for r in brute_force_topk(emb, query, k=10).collect()]
-    assert got == _np_topk(rows, query, 10)
-    assert got[0] == rows[0].vec_id  # self is most similar
-
-
-def test_topk_for_queries_matches_numpy(spark, emb):
-    rows = emb.collect()
-    queries = [(int(rows[i].vec_id), list(rows[i].embedding)) for i in (0, 7, 33)]
-    out = topk_for_queries(emb, queries, k=5).collect()
-    by_q = {}
-    for r in sorted(out, key=lambda r: (r.query_id, -r.cosine, r.vec_id)):
-        by_q.setdefault(r.query_id, []).append(r.vec_id)
-    for qid, qv in queries:
-        assert by_q[qid] == _np_topk(rows, qv, 5)
-
-
-def test_lsh_recall_reasonable(spark, emb):
-    rows = emb.collect()
-    queries = [(int(rows[i].vec_id), list(rows[i].embedding)) for i in (0, 11)]
-    exact = {q[0]: set(_np_topk(rows, q[1], 10)) for q in queries}
-    approx = lsh_bucketed_topk(emb, queries, k=10, n_bits=4, num_tables=12).collect()
-    by_q = {}
-    for r in approx:
-        by_q.setdefault(r.query_id, set()).add(r.vec_id)
-    for qid in exact:
-        recall = len(exact[qid] & by_q.get(qid, set())) / 10
-        assert recall >= 0.5, f"recall {recall} too low for query {qid}"
-
-
-# -------- multimodal plumbing --------
 
 def test_multimodal_feature_plumbing(spark):
     media = synth_media(spark, 60)
@@ -87,96 +31,3 @@ def test_resize_and_frames(spark):
     assert fr.select("media_id").distinct().count() == n_videos
 
 
-# -------- IVF --------
-
-def test_ivf_topk_recall(spark, emb):
-    from cwds_jobs_spark.operators.similarity import ivf_topk, train_ivf_centroids
-
-    rows = emb.collect()
-    queries = [(int(rows[i].vec_id), list(rows[i].embedding)) for i in (0, 5, 21)]
-    exact = {qid: set(_np_topk(rows, qv, 10)) for qid, qv in queries}
-    cent = train_ivf_centroids(emb, n_centroids=8)
-    got = ivf_topk(emb, queries, k=10, centroids=cent, nprobe=4)
-    by_q = {}
-    for r in got.collect():
-        by_q.setdefault(r.query_id, set()).add(r.vec_id)
-    for qid, _ in queries:
-        # nprobe=4 of 8 cells scans ~half the corpus; self-match plus
-        # most neighbors should survive
-        assert qid in by_q[qid]
-        recall = len(exact[qid] & by_q[qid]) / 10
-        assert recall >= 0.5, f"IVF recall {recall} too low for {qid}"
-
-
-def test_ivf_assignment_covers_corpus(spark, emb):
-    from cwds_jobs_spark.operators.similarity import ivf_assign, train_ivf_centroids
-
-    cent = train_ivf_centroids(emb, n_centroids=8)
-    assigned = ivf_assign(emb, cent)
-    assert assigned.count() == emb.count()
-    cells = [r.ivf_cell for r in assigned.select("ivf_cell").distinct().collect()]
-    assert all(0 <= c < 8 for c in cells) and len(cells) >= 4
-
-
-def test_embedding_near_dups_exact_vs_numpy(spark, emb):
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    rows = emb.collect()
-    m = np.vstack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
-    ids = np.array([r.vec_id for r in rows])
-    n = np.linalg.norm(m, axis=1)
-    n[n == 0] = 1.0
-    sims = (m / n[:, None]) @ (m / n[:, None]).T
-    thr = 0.4  # max pair cosine in this corpus is ~0.5 (no planted dups)
-    truth = {}
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            c = round(float(sims[i, j]), 6)
-            if c >= thr:
-                a, b = sorted((int(ids[i]), int(ids[j])))
-                truth[(a, b)] = c
-    got = {
-        (r.id_a, r.id_b): r.cosine
-        for r in embedding_near_dups(emb, threshold=thr, num_tables=24).collect()
-    }
-    assert len(got) > 10  # non-vacuous check on this corpus
-    assert set(got) == set(truth)  # LSH params give full recall here
-    for p in got:
-        assert abs(got[p] - truth[p]) < 1e-5
-
-
-def test_embedding_near_dups_bucket_verify_matches_join(spark, emb):
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    kw = dict(threshold=0.4, num_tables=24)
-    join_pairs = {
-        (r.id_a, r.id_b): r.cosine
-        for r in embedding_near_dups(emb, **kw).collect()
-    }
-    bucket_pairs = {
-        (r.id_a, r.id_b): r.cosine
-        for r in embedding_near_dups(emb, verify="bucket", **kw).collect()
-    }
-    assert set(bucket_pairs) == set(join_pairs) and join_pairs
-    for p in join_pairs:  # same exact cosine up to summation order
-        assert abs(bucket_pairs[p] - join_pairs[p]) < 1e-5
-
-
-def test_embedding_near_dups_bucket_verify_caps_hot_buckets(spark):
-    from cwds_jobs_spark.synth import synth_embeddings
-    from cwds_jobs_spark.operators.similarity import embedding_near_dups
-
-    vecs = synth_embeddings(spark, 2000, num_partitions=8)
-    kw = dict(threshold=0.8, n_bits=4, num_tables=8)
-    a = {(r.id_a, r.id_b)
-         for r in embedding_near_dups(vecs, max_bucket=130, **kw).collect()}
-    b = {(r.id_a, r.id_b)
-         for r in embedding_near_dups(
-             vecs, max_bucket=130, verify="bucket", **kw).collect()}
-    uncapped = {(r.id_a, r.id_b)
-                for r in embedding_near_dups(
-                    vecs, max_bucket=100_000, **kw).collect()}
-    # the cap drops the SAME hot buckets in both strategies, and it is
-    # genuinely active at this config (drops recall vs uncapped)
-    assert a == b and len(a) > 100
-    assert len(a) < len(uncapped)

@@ -1,6 +1,6 @@
 """Hot-key skew: the LWW/merge path must stay correct (and reduce
 map-side) when one conversation dominates the tail — the 10^10-scale
-failure mode the salted design targets (SURVEY.md §7.3)."""
+failure mode a skew defense targets (SURVEY.md §7.3)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from cwds_jobs_spark.operators.dedup import lww_dedup, lww_dedup_window
+from cwds_jobs_spark.operators.dedup import lww_dedup
 from cwds_jobs_spark.operators.merge import merge_apply
 from cwds_jobs_spark.oracle import assert_matches, replay
 from cwds_jobs_spark.schema import CHANGES_SCHEMA, TRANSCRIPTS_SCHEMA
@@ -52,22 +52,6 @@ def test_skewed_merge_matches_oracle(spark, ws):
         (F.col("conv_id") == "conv_hot") & (F.col("turn_idx") == 0)
     ).collect()
     assert len(hot) == 1
-
-
-def test_agg_and_salted_window_dedup_agree_under_skew(spark):
-    """The two LWW strategies (hash-agg vs salted two-level
-    row_number) are interchangeable — identical winners on skewed
-    input."""
-    batch = _skewed_batch(spark, n=5000)
-    a = {
-        (r.conv_id, r.turn_idx): (r.op_ts, r.lsn, r.op, r.text)
-        for r in lww_dedup(batch).collect()
-    }
-    b = {
-        (r.conv_id, r.turn_idx): (r.op_ts, r.lsn, r.op, r.text)
-        for r in lww_dedup_window(batch, salt_buckets=8).collect()
-    }
-    assert a == b
 
 
 def test_map_side_combine_shrinks_hot_key_shuffle(spark):

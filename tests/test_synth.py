@@ -74,25 +74,3 @@ def test_synth_docs_partition_stable_and_planted_dups(spark):
     # non-pair neighbors: near-zero overlap
     w2 = set(rows[2].split())
     assert len(w1 & w2) / len(w1 | w2) < 0.1
-
-
-def test_synth_embeddings_partition_stable_and_planted_dups(spark):
-    import math
-
-    from cwds_jobs_spark.synth import synth_embeddings
-
-    a = synth_embeddings(spark, 300)
-    b = synth_embeddings(spark, 300, num_partitions=5)
-    va = {r.vec_id: list(r.embedding) for r in a.collect()}
-    vb = {r.vec_id: list(r.embedding) for r in b.collect()}
-    assert va == vb
-
-    def cos(x, y):
-        dot = sum(p * q for p, q in zip(x, y))
-        nx = math.sqrt(sum(p * p for p in x))
-        ny = math.sqrt(sum(q * q for q in y))
-        return dot / (nx * ny)
-
-    # planted pair cosine ~0.99; unrelated neighbors ~0
-    assert cos(va[0], va[1]) > 0.95
-    assert abs(cos(va[1], va[2])) < 0.5

@@ -115,15 +115,15 @@ def merge_apply(
     watermark.
 
     ``watermark`` is the window's ``(op_ts, lsn)`` high watermark; it
-    is recorded atomically WITH the ledger entry.  A ledger-skipped
-    replay returns it as ``committed_watermark`` so the caller can
-    restore its savepoint from what was actually committed — the
-    recomputed window on a crash-rerun may be a superset of the
-    committed one (new tail files arrived, approxQuantile cut drift),
-    and advancing the savepoint from it would skip the difference.
-    A multi-source union window passes a ``{source: (op_ts, lsn)}``
-    dict instead; the ledger then carries one watermark column per
-    source (reference CapUsersSavePoint.java:9-47 vector analog).
+    is recorded atomically WITH the ledger entry and read back with
+    ``SnapshotTable.committed_watermark``.  That makes the ledger the
+    resume position a driver recovers from after a crash between the
+    table commit and its own bookkeeping (the batch runner, before its
+    first window).  A multi-source union window passes a
+    ``{source: (op_ts, lsn)}`` dict instead; the ledger then carries
+    one watermark per source (reference CapUsersSavePoint.java:9-47
+    vector analog).  A ledger-skipped replay records nothing and
+    returns ``{"skipped": True, "batch_id", "events": 0}``.
 
     ``purge_before`` drops, from the rewritten buckets, every LWW winner
     that is a tombstone with ``_op_ts < purge_before`` (see
@@ -136,13 +136,7 @@ def merge_apply(
     if probe is not None and drop_deletes:
         raise ValueError("a caller's probe cannot describe a drop_deletes window")
     if batch_id <= table.committed_batch(job_id):
-        return {
-            "skipped": True,
-            "batch_id": batch_id,
-            "events": 0,
-            "committed_batch": table.committed_batch(job_id),
-            "committed_watermark": table.committed_watermark(job_id),
-        }
+        return {"skipped": True, "batch_id": batch_id, "events": 0}
     if watermark is None:
         wm = None
     elif isinstance(watermark, dict):
@@ -266,58 +260,22 @@ def compact_tombstones(table: SnapshotTable, watermark_ts) -> int:
     ``(n tombstones, min tombstone version)`` in the snapshot, derived
     from the written files' parquet footers (see ``TOMB_TS_COL`` in
     ``table.snapshot`` — null_count arithmetic, zero data pages), so a
-    maintenance cycle on a 10^10-row table touches no data files when
-    nothing is purgeable.  Buckets written before tombstone tracking
-    (no ``tomb`` entry) fall back to a data probe restricted to those
-    buckets only, and the probed ``(n, min_ts)`` facts are written BACK
-    into the snapshot (``record_bucket_tomb_stats``) so the fallback
-    runs once per bucket lifetime, not once per maintenance cycle —
-    the files are immutable until the bucket's next rewrite, which
-    records fresh stats itself.
+    maintenance cycle on a 10^10-row table touches no data files.  A
+    bucket with no ``tomb`` entry is skipped: its files predate the
+    ``_deleted`` column (so it holds no tombstones) or lacked footer
+    stats.  Skipping never changes table state: a dead tombstone costs
+    only space, and the next merge that rewrites its bucket records
+    fresh ``tomb`` stats (and, given ``purge_before``, drops it).
     """
     if TOMBSTONE not in [f.name for f in table.schema.fields]:
         return 0
-    hits: set[int] = set()
-    unknown: list[int] = []
-    for b, entry in table.bucket_meta().items():
+    buckets = []
+    for b, entry in sorted(table.bucket_meta().items()):
         t = entry.get("tomb")
-        if t is None:
-            unknown.append(b)
-        elif t["n"] > 0 and t["min_ts"] is not None and (
+        if t and t["n"] > 0 and t["min_ts"] is not None and (
             dt.datetime.fromisoformat(t["min_ts"]) < watermark_ts
         ):
-            hits.add(b)
-    if unknown:
-        # full (n, min_ts) probe — same restricted scan the purge
-        # decision needs, but its result is recorded so the NEXT cycle
-        # decides these buckets from metadata alone
-        is_tomb = F.coalesce(F.col(TOMBSTONE), F.lit(False))
-        probe = (
-            table.read(unknown, include_internal=True)
-            .groupBy(table.bucket_of().alias("b"))
-            .agg(
-                F.sum(is_tomb.cast("int")).alias("n"),
-                F.min(F.when(is_tomb, F.col(VERSION_TS))).alias("min_ts"),
-            )
-            .collect()
-        )
-        found = {
-            int(r["b"]): {
-                "n": int(r["n"] or 0),
-                "min_ts": r["min_ts"].isoformat()
-                if (r["n"] or 0) > 0 and r["min_ts"] is not None
-                else None,
-            }
-            for r in probe
-        }
-        stats = {b: found.get(b, {"n": 0, "min_ts": None}) for b in unknown}
-        table.record_bucket_tomb_stats(stats)
-        for b, t in stats.items():
-            if t["n"] > 0 and t["min_ts"] is not None and (
-                dt.datetime.fromisoformat(t["min_ts"]) < watermark_ts
-            ):
-                hits.add(b)
-    buckets = sorted(hits)
+            buckets.append(b)
     if not buckets:
         return 0
     kept = table.read(buckets, include_internal=True).filter(

@@ -17,6 +17,11 @@ The reference's lifecycle (SURVEY.md §3.1):
   savepoint into the same target
   (jobs-common/.../inject/ElasticSearchModule.java:45-47).
 
+The snapshot ledger records each window's batch id and high watermark
+in the same atomic commit as its data, and it rules the resume
+position: an incremental run reconciles the state file with it once,
+before the first window is planned (``CdcJobRunner._resume``).
+
 Batch-mode driver; the Structured Streaming equivalent (checkpoint
 instead of explicit savepoint file) lives in ``streaming.driver``.
 """
@@ -34,8 +39,8 @@ from cwds_jobs_spark import state as st
 from cwds_jobs_spark.lineage import probe_window
 from cwds_jobs_spark.operators.merge import merge_apply
 from cwds_jobs_spark.schema import TRANSCRIPTS_SCHEMA
-from cwds_jobs_spark.sources.changes import read_changes
-from cwds_jobs_spark.table.snapshot import SnapshotTable
+from cwds_jobs_spark.sources.changes import read_changes, source_high_watermark
+from cwds_jobs_spark.table.snapshot import CommitConflict, SnapshotTable
 
 
 @dataclass
@@ -63,13 +68,8 @@ class CdcJobRunner:
     # -------------- target table --------------
 
     def table(self) -> SnapshotTable:
-        if SnapshotTable.exists(self.cfg.table_path):
-            return SnapshotTable.load(self.spark, self.cfg.table_path)
-        return SnapshotTable.create(
-            self.spark,
-            self.cfg.table_path,
-            TRANSCRIPTS_SCHEMA,
-            num_buckets=self.cfg.num_buckets,
+        return SnapshotTable.open(
+            self.spark, self.cfg.table_path, TRANSCRIPTS_SCHEMA, self.cfg.num_buckets
         )
 
     # -------------- lifecycle --------------
@@ -123,12 +123,9 @@ class CdcJobRunner:
         event that raced in during the bulk load is replayed by the
         first incremental window (idempotent MERGE absorbs it).
         """
-        src = read_changes(self.spark, self.cfg.changes_dir)
-        row = src.agg(
-            F.max(F.struct(F.col("op_ts"), F.col("lsn"))).alias("m")
-        ).collect()[0]["m"]
-        if row is not None:
-            container.savepoint = st.SavePoint(ts=row["op_ts"], lsn=row["lsn"])
+        high = source_high_watermark(read_changes(self.spark, self.cfg.changes_dir))
+        if high is not None:
+            container.savepoint = high
         container.job_mode = st.INCREMENTAL_LOAD
         self.sp_svc.write(container)
 
@@ -159,15 +156,51 @@ class CdcJobRunner:
         ).stat.approxQuantile("t", [frac], 0.01)[0]
         return pending.filter(F.col("op_ts").cast("double") <= boundary)
 
+    def _resume(self, tbl: SnapshotTable) -> st.SavePointContainer:
+        """The state file's container, reconciled with the table ledger.
+
+        A crash after a table commit but before its savepoint write
+        leaves the ledger ahead of the state file; the savepoint and
+        ``batch_id`` then come from the ledger, whose watermark was
+        committed with the window (a rerun's recomputed window would
+        not reproduce it: new tail files, a different capped cut).  The
+        state file is rewritten only when this changes it.
+        """
+        container = self.sp_svc.read()
+        assert container is not None, "incremental run requires a savepoint"
+        committed = tbl.committed_batch(self.cfg.job_id)
+        if committed <= container.batch_id:
+            return container
+        wm = tbl.committed_watermark(self.cfg.job_id)
+        if wm is not None and "sources" in wm:
+            # cross-mode job_id reuse: the ledger carries a multi-source
+            # VECTOR watermark, and there is no sound scalar savepoint
+            # for a single-directory tail — refuse instead of guessing
+            raise ValueError(
+                f"job_id {self.cfg.job_id!r} has a multi-source vector "
+                "watermark in the table ledger; resume it via streaming."
+                "driver.start_multisource_cdc_stream (or use a fresh "
+                "job_id for single-source batch runs)"
+            )
+        if wm is not None:
+            container.savepoint = st.SavePoint(
+                ts=dt.datetime.fromisoformat(wm["ts"]), lsn=int(wm["lsn"])
+            )
+        # else: the ledger predates watermark recording — keep the
+        # savepoint; the next batch re-applies the overlap idempotently
+        container.batch_id = committed
+        self.sp_svc.write(container)
+        return container
+
     def run_incremental(self) -> dict:
         """Apply all pending change windows strictly after the savepoint.
 
         Loop shape mirrors BatchProcessor.processBatches
         (jobs-common/.../batch/BatchProcessor.java:43-54): window →
         merge → savepoint commit, until the tail is drained.  The
-        savepoint file is written only after the table commit, so a
-        crash replays the window (MERGE is idempotent under replay and
-        the ledger short-circuits it — effectively-once, T3).
+        savepoint file is written only after the table commit, and the
+        resume position is reconciled with the ledger once, before the
+        first window is planned (:meth:`_resume`) — effectively-once, T3.
         """
         from cwds_jobs_spark.progress import ProgressReporter
 
@@ -177,8 +210,7 @@ class CdcJobRunner:
         )
 
         tbl = self.table()
-        container = self.sp_svc.read()
-        assert container is not None, "incremental run requires a savepoint"
+        container = self._resume(tbl)
         total = {"events": 0, "windows": 0, "mode": st.INCREMENTAL_LOAD}
         reporter = ProgressReporter()
         cap = self.cfg.max_events_per_window
@@ -215,12 +247,9 @@ class CdcJobRunner:
                 probe = probe_window(window, tbl.bucket_of())
                 if probe.high is None:
                     if planned:
-                        # an empty PLANNED window (savepoint restored
-                        # past this boundary, or a footer-stats
-                        # misestimate) is not end-of-tail: advance to
-                        # the next boundary / the final uncapped pass
-                        # instead of reporting a complete drain while
-                        # events remain.
+                        # an empty PLANNED window (a footer-stats
+                        # misestimate) is not end-of-tail: go on to the
+                        # next boundary / the final uncapped pass
                         continue
                     break  # empty batch terminates (BatchProcessor.java:46-51)
                 batch_id = container.batch_id + 1
@@ -233,51 +262,13 @@ class CdcJobRunner:
                     watermark=probe.high,
                     probe=probe,
                 )
-                if stats.get("skipped"):
-                    # a prior run committed this batch_id to the table
-                    # ledger, then crashed before the savepoint write.
-                    # The window just recomputed is NOT the committed
-                    # one (new tail files may have arrived; a capped
-                    # cut is not reproducible), so restore the
-                    # savepoint from the ledger's recorded watermark —
-                    # advancing from the recomputed window's ``hi``
-                    # would skip everything in the difference forever.
-                    wm = stats.get("committed_watermark")
-                    if wm is not None and "sources" in wm:
-                        # cross-mode job_id reuse: the ledger carries a
-                        # multi-source VECTOR watermark (this job_id
-                        # previously ran through the multisource
-                        # streaming driver).  There is no sound scalar
-                        # savepoint to restore for a single-directory
-                        # batch tail — refuse loudly instead of a
-                        # KeyError (or worse, a silent guess that
-                        # skips or replays one source's suffix).
-                        raise ValueError(
-                            f"job_id {self.cfg.job_id!r} has a multi-"
-                            "source vector watermark in the table "
-                            "ledger; resume it via streaming.driver."
-                            "start_multisource_cdc_stream (or use a "
-                            "fresh job_id for single-source batch runs)"
-                        )
-                    if wm is not None:
-                        container.savepoint = st.SavePoint(
-                            ts=dt.datetime.fromisoformat(wm["ts"]),
-                            lsn=int(wm["lsn"]),
-                        )
-                    # else: ledger predates watermark recording — keep
-                    # the savepoint put; the next batch_id re-applies
-                    # the overlap idempotently.
-                    container.batch_id = max(
-                        batch_id, stats.get("committed_batch", batch_id)
+                if stats["skipped"]:
+                    # _resume put batch_id past the ledger, so another
+                    # writer is committing under this job_id
+                    raise CommitConflict(
+                        f"job_id {self.cfg.job_id!r}: batch {batch_id} was "
+                        "committed by another writer"
                     )
-                    self.sp_svc.write(container)
-                    # the restored watermark may sit PAST boundaries
-                    # planned before the crash was discovered; a stale
-                    # boundary would plan an empty window (handled
-                    # above, but pointless) — drop them here.
-                    while boundaries and boundaries[0] <= container.savepoint.ts:
-                        boundaries.pop(0)
-                    continue
                 container.savepoint = st.SavePoint(*probe.high)
                 container.batch_id = batch_id
                 self.sp_svc.write(container)

@@ -68,6 +68,17 @@ def read_changes(
     return df
 
 
+def source_high_watermark(df: DataFrame) -> SavePoint | None:
+    """The tail's current max ``(op_ts, lsn)``, or None when it is
+    empty: the initial load's cutover savepoint and each multi-source
+    leg's pre-run bound (reference CapUsersSavePointService.java:39-47,
+    CwsInitialJobModeFinalizer.java:34-45)."""
+    row = df.agg(F.max(F.struct("op_ts", "lsn")).alias("m")).collect()[0]["m"]
+    if row is None:
+        return None
+    return SavePoint(ts=row["op_ts"], lsn=row["lsn"])
+
+
 def stream_changes(
     spark: SparkSession,
     changes_dir: str,

@@ -18,6 +18,10 @@ Mirrors the reference's savepoint file semantics:
 The savepoint is a ``(op_ts, lsn)`` vector: the strict lexicographic
 "greater than savepoint" predicate is the resume contract
 (SavePointServiceImpl.java:26-31; TimestampJobBatchIterator.java:29-35).
+
+The savepoint here is a copy: the snapshot ledger commits each window's
+watermark with its data, and the runner takes the ledger's value when
+the ledger is ahead (``runner.CdcJobRunner._resume``).
 """
 
 from __future__ import annotations

@@ -116,12 +116,7 @@ def start_cdc_stream(
     from cwds_jobs_spark.progress import ProgressReporter
 
     reporter = reporter or ProgressReporter(total_expected=total_expected)
-    if SnapshotTable.exists(table_path):
-        table = SnapshotTable.load(spark, table_path)
-    else:
-        table = SnapshotTable.create(
-            spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets=num_buckets
-        )
+    table = SnapshotTable.open(spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets)
 
     src = stream_changes(
         spark, changes_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
@@ -210,8 +205,9 @@ def start_multisource_cdc_stream(
     AbstractCapUsersJob.java:30-50): each source directory becomes one
     union leg of a single ``readStream``, and Spark's checkpoint
     tracks every leg's consumed files INDEPENDENTLY in the offset log
-    — a crash mid-drain resumes both tails with neither skipped,
-    without a hand-rolled vector file.
+    — a crash mid-drain resumes both tails with neither skipped.  The
+    ledger vector recorded below is bookkeeping here; for the batch
+    driver it is the read filter.
 
     Each leg is tagged with a ``_source`` column.  ``foreachBatch``
     probes the persisted batch once with ``_source`` in the window
@@ -239,12 +235,7 @@ def start_multisource_cdc_stream(
     rewritten.  Tested in ``tests/test_multisource_streaming.py``
     (two-source evolution: one source evolves, the other lags).
     """
-    if SnapshotTable.exists(table_path):
-        table = SnapshotTable.load(spark, table_path)
-    else:
-        table = SnapshotTable.create(
-            spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets=num_buckets
-        )
+    table = SnapshotTable.open(spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets)
 
     from pyspark.sql import functions as F
 

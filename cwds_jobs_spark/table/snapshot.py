@@ -30,11 +30,10 @@ metadata layer over parquet that is the MERGE target of
   ``{job_id: last_committed_batch_id}``.  Replayed ``foreachBatch``
   deliveries (at-least-once) are detected and skipped, making table
   state exactly-once (SURVEY.md §2.9 T3).
-
-Savepoint/job-mode state intentionally lives *outside* this class
-(``cwds_jobs_spark.state``), mirroring the reference's separation of
-the savepoint file from the index
-(jobs-common/.../savepoint/SavePointContainerServiceImpl.java:29-86).
+- **Ledger watermark** — a commit can record its window's ``(op_ts,
+  lsn)`` high watermark (or a per-source vector) with its ledger entry:
+  the resume position the batch drivers recover from.  Only the job
+  mode and the runner's savepoint copy live in ``cwds_jobs_spark.state``.
 
 File listing uses the local filesystem (sandbox); on a real cluster
 swap ``_list_parquet`` for the Hadoop FileSystem API — the metadata
@@ -73,8 +72,8 @@ def _tombstone_footer_stats(
     """Exact ``{"n": tombstones, "min_ts": iso-or-None}`` for a bucket's
     freshly written files, read from parquet footers only (zero data
     pages).  None when any row group lacks the column or usable stats
-    (caller then records nothing — the maintenance probe falls back to
-    a data scan for that bucket)."""
+    (caller then records nothing, and tombstone maintenance skips that
+    bucket until its next rewrite)."""
     import datetime as _dt
 
     import pyarrow.parquet as pq
@@ -191,6 +190,16 @@ class SnapshotTable:
     def exists(cls, path: str) -> bool:
         return os.path.exists(os.path.join(path, "_meta", "_VERSION"))
 
+    @classmethod
+    def open(
+        cls, spark: SparkSession, path: str, schema: T.StructType, num_buckets: int
+    ) -> "SnapshotTable":
+        """Load the table at ``path``, creating it empty if it does not
+        exist (``schema`` and ``num_buckets`` apply only then)."""
+        if cls.exists(path):
+            return cls.load(spark, path)
+        return cls.create(spark, path, schema, num_buckets=num_buckets)
+
     # ---------------- properties ----------------
 
     @property
@@ -217,12 +226,12 @@ class SnapshotTable:
         """The ``{"ts": iso, "lsn": int}`` high watermark of the last
         committed batch for ``job_id``, or None.
 
-        Recorded atomically WITH the ledger entry so a crash between
-        table commit and savepoint-file write is recoverable: the
-        rerun's recomputed window is not reproducible (new tail files,
-        approxQuantile rank error), so the savepoint must be restored
-        from what was actually committed, not from the recomputed
-        window's high watermark.
+        Recorded atomically WITH the ledger entry, so it is exactly
+        what was committed: the batch runner restores its savepoint from
+        it after a crash before the savepoint write (a rerun's
+        recomputed window is not reproducible — new tail files, a
+        different capped cut).  A multi-source job records
+        ``{"sources": {name: {"ts", "lsn"}}}`` instead.
         """
         return self._snap.get("ledger_wm", {}).get(job_id)
 
@@ -316,7 +325,6 @@ class SnapshotTable:
         new_schema: T.StructType | None = None,
         ledger_update: dict[str, int] | None = None,
         ledger_watermark: dict[str, dict] | None = None,
-        write_tasks_per_bucket: int = 1,
         fold=None,
     ) -> None:
         """Atomically replace ``affected`` buckets with ``df``'s rows.
@@ -341,7 +349,6 @@ class SnapshotTable:
             sid,
             self.bucket_of(),
             n_buckets=len(affected) or self.num_buckets,
-            write_tasks_per_bucket=write_tasks_per_bucket,
             fold=fold,
         )
         for b in affected:
@@ -357,7 +364,7 @@ class SnapshotTable:
         self._write_snapshot(snap)
         self._snap = snap
 
-    def rebucket(self, new_num_buckets: int, write_tasks_per_bucket: int = 1) -> None:
+    def rebucket(self, new_num_buckets: int) -> None:
         """Rewrite the table into ``new_num_buckets`` hash buckets.
 
         The growth path for a long-lived table: bucket count is fixed
@@ -376,7 +383,6 @@ class SnapshotTable:
             str(snap["current_schema_id"]),
             bucket_expr(new_num_buckets, self.key_cols[0]),
             n_buckets=new_num_buckets,
-            write_tasks_per_bucket=write_tasks_per_bucket,
         )
         snap["buckets"] = {str(b): e for b, e in written.items()}
         self._write_snapshot(snap)
@@ -390,7 +396,6 @@ class SnapshotTable:
         bucket,
         *,
         n_buckets: int,
-        write_tasks_per_bucket: int = 1,
         fold=None,
     ) -> dict[int, dict]:
         """Write ``df`` into a fresh commit dir, one file group per
@@ -404,22 +409,14 @@ class SnapshotTable:
         ``write.distribution-mode=hash``).  Each bucket lands in exactly
         one of ``min(n_buckets, defaultParallelism)`` write tasks, so a
         task may write several buckets but never shares one.
-        ``write_tasks_per_bucket`` > 1 salts the clustering for huge
-        buckets so several tasks (and files) share the write of one
-        bucket (not combinable with ``fold``).
         """
         abs_dir = os.path.join(
             self.path, f"data/commit-{version:09d}-{uuid.uuid4().hex[:8]}"
         )
-        out = df.withColumn(BUCKET_COL, bucket)
-        if write_tasks_per_bucket > 1:
-            salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(write_tasks_per_bucket))
-            out = out.repartition(
-                n_buckets * write_tasks_per_bucket, F.col(BUCKET_COL), salt
-            )
-        else:
-            n_tasks = min(n_buckets, self.spark.sparkContext.defaultParallelism)
-            out = out.repartition(max(1, n_tasks), F.col(BUCKET_COL))
+        n_tasks = min(n_buckets, self.spark.sparkContext.defaultParallelism)
+        out = df.withColumn(BUCKET_COL, bucket).repartition(
+            max(1, n_tasks), F.col(BUCKET_COL)
+        )
         if fold is not None:
             out = fold(out)
         track_tombs = "_deleted" in out.columns and "_op_ts" in out.columns
@@ -444,29 +441,6 @@ class SnapshotTable:
         return {
             b: entry(files) for b, files in _list_parquet(abs_dir, self.path).items()
         }
-
-    def record_bucket_tomb_stats(self, stats: dict[int, dict]) -> None:
-        """Metadata-only commit backfilling ``tomb`` tombstone stats for
-        buckets written before footer tracking existed.
-
-        ``compact_tombstones`` falls back to a restricted data probe for
-        buckets with no ``tomb`` entry; recording the probe's result here
-        makes that fallback once-per-bucket-lifetime instead of
-        once-per-maintenance-cycle (the files are immutable until the
-        bucket's next rewrite, which records fresh stats itself)."""
-        if not stats:
-            return
-        snap = dict(self._snap)
-        snap["version"] = self.version + 1
-        snap["buckets"] = dict(snap["buckets"])
-        for b, t in stats.items():
-            entry = snap["buckets"].get(str(b))
-            if entry is not None and "tomb" not in entry:
-                entry = dict(entry)
-                entry["tomb"] = {"n": int(t["n"]), "min_ts": t["min_ts"]}
-                snap["buckets"][str(b)] = entry
-        self._write_snapshot(snap)
-        self._snap = snap
 
     def record_ledger(
         self, job_id: str, batch_id: int, watermark: dict | None = None

@@ -36,16 +36,30 @@ def test_merge_writes_one_file_per_bucket(spark, ws):
     assert all(v == 1 for v in bucket_file_counts(tbl).values())
 
 
+def _fragment_buckets(tbl):
+    """Simulate a fragmented table (a parallel write that left several
+    files per bucket): split each bucket's file in two and point the
+    snapshot entry at both halves."""
+    import pyarrow.parquet as pq
+
+    for entry in tbl._snap["buckets"].values():
+        halves = []
+        for f in entry["files"]:
+            path = os.path.join(tbl.path, f)
+            t = pq.read_table(path)
+            mid = t.num_rows // 2
+            for i, part in enumerate((t.slice(0, mid), t.slice(mid))):
+                half = f[: -len(".parquet")] + f"-half{i}.parquet"
+                pq.write_table(part, os.path.join(tbl.path, half))
+                halves.append(half)
+        entry["files"] = halves
+
+
 def test_compaction_preserves_state_and_shrinks_files(spark, ws):
     tbl = SnapshotTable.create(spark, ws["table"], TRANSCRIPTS_SCHEMA, num_buckets=4)
     events = _apply_windows(spark, tbl)
     before_state = table_state(tbl.read())
-    # simulate a huge-bucket parallel write: 4 tasks (files) per bucket
-    tbl.overwrite_buckets(
-        tbl.read(include_internal=True),
-        list(range(4)),
-        write_tasks_per_bucket=4,
-    )
+    _fragment_buckets(tbl)
     stats0 = table_file_stats(tbl)
     assert stats0["max_files_in_bucket"] > 1
 

@@ -108,77 +108,3 @@ def test_tombstone_probe_is_metadata_only(spark, ws, monkeypatch):
     assert compact_tombstones(tbl, TS + dt.timedelta(seconds=60)) == 1
     assert len(reads) == 1 and len(reads[0][0]) == 1  # one bucket list
     assert tbl.read(include_internal=True).filter("_deleted").count() == 0
-
-
-def test_tombstone_probe_falls_back_for_untracked_buckets(spark, ws, monkeypatch):
-    """Buckets written before tombstone tracking (no `tomb` metadata)
-    get a data probe restricted to THOSE buckets only — never the full
-    table — and purging them still works."""
-    tbl = SnapshotTable.create(spark, ws["table"], TRANSCRIPTS_SCHEMA, num_buckets=4)
-    w = spark.createDataFrame(
-        [_ev("a", 1, "D", 5, 2), _ev("b", 2, "I", 6, 3)], CHANGES_SCHEMA
-    )
-    merge_apply(tbl, w, job_id="j", batch_id=0)
-    # simulate a legacy snapshot: strip the recorded stats
-    legacy = [b for b, e in tbl.bucket_meta().items() if e["tomb"]["n"]]
-    for b in legacy:
-        tbl._snap["buckets"][str(b)].pop("tomb")
-
-    probes = []
-    real_read = SnapshotTable.read
-    monkeypatch.setattr(
-        SnapshotTable,
-        "read",
-        lambda self, *a, **k: (probes.append(a), real_read(self, *a, **k))[1],
-    )
-    assert compact_tombstones(tbl, TS + dt.timedelta(seconds=60)) == len(legacy)
-    # first read = the restricted probe over exactly the legacy buckets
-    assert sorted(probes[0][0]) == sorted(legacy)
-    assert tbl.read(include_internal=True).filter("_deleted").count() == 0
-
-
-def test_tombstone_fallback_backfills_stats_once(spark, ws, monkeypatch):
-    """The legacy-bucket data probe records its (n, min_ts) findings
-    back into the snapshot, so a SECOND maintenance cycle on the same
-    un-rewritten buckets decides from metadata alone — zero data-file
-    reads (round-4 hygiene note: the fallback used to re-probe every
-    cycle until the bucket happened to be rewritten)."""
-    tbl = SnapshotTable.create(spark, ws["table"], TRANSCRIPTS_SCHEMA, num_buckets=4)
-    w = spark.createDataFrame(
-        [_ev("a", 1, "D", 5, 2), _ev("b", 2, "I", 6, 3)], CHANGES_SCHEMA
-    )
-    merge_apply(tbl, w, job_id="j", batch_id=0)
-    # simulate a legacy snapshot: strip ALL recorded stats
-    for b in list(tbl.bucket_meta()):
-        tbl._snap["buckets"][str(b)].pop("tomb", None)
-
-    probes = []
-    real_read = SnapshotTable.read
-    monkeypatch.setattr(
-        SnapshotTable,
-        "read",
-        lambda self, *a, **k: (probes.append(a), real_read(self, *a, **k))[1],
-    )
-    # cycle 1, watermark BEFORE the tombstone: probes once, purges
-    # nothing, but backfills exact stats for every legacy bucket
-    assert compact_tombstones(tbl, TS + dt.timedelta(seconds=1)) == 0
-    assert len(probes) == 1
-    meta = tbl.bucket_meta()
-    assert all("tomb" in e for e in meta.values())
-    assert sum(e["tomb"]["n"] for e in meta.values()) == 1
-    mins = [e["tomb"]["min_ts"] for e in meta.values() if e["tomb"]["n"]]
-    assert mins == [(TS + dt.timedelta(seconds=5)).isoformat()]
-
-    # cycle 2, same watermark: decided from the backfilled metadata,
-    # ZERO reads
-    probes.clear()
-    assert compact_tombstones(tbl, TS + dt.timedelta(seconds=1)) == 0
-    assert probes == []
-
-    # and the backfilled stats still drive a correct purge later
-    assert compact_tombstones(tbl, TS + dt.timedelta(seconds=60)) == 1
-    assert tbl.read(include_internal=True).filter("_deleted").count() == 0
-
-    # a reloaded table sees the backfilled stats (they were committed)
-    tbl2 = SnapshotTable.load(spark, ws["table"])
-    assert all("tomb" in e for e in tbl2.bucket_meta().values())

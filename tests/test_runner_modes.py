@@ -278,45 +278,103 @@ def test_empty_planned_window_advances_to_next_boundary(spark, ws, monkeypatch):
     assert out["events"] == 100
 
 
-def test_crash_between_commit_and_savepoint_never_skips_events(spark, ws):
-    """Crash AFTER the table/ledger commit but BEFORE the savepoint
-    write, with new tail files arriving before the restart: the rerun's
-    recomputed window is a strict superset of the committed one.  The
-    ledger skip must restore the savepoint from the COMMITTED window's
-    recorded watermark — advancing from the recomputed window would
-    silently skip the new events forever (round-2 advisory finding)."""
-    w0 = synth_changes(spark, 300, n_convs=10)
-    write_changes_window(w0, ws["changes"], "w0")
-    r = _runner(spark, ws)
-    r.run()  # initial load + cutover; batch_id now 0
-
+def _hand_commit(spark, ws, r, w1):
+    """A prior run applied window 1 (table + ledger + watermark
+    committed), then died before ``sp_svc.write()``."""
     from cwds_jobs_spark.operators.merge import merge_apply
 
-    # window 1 arrives and is applied (table + ledger + watermark
-    # committed) but the process dies before sp_svc.write()
-    w1 = synth_changes(spark, 100, n_convs=10, start_lsn=300)
-    write_changes_window(w1, ws["changes"], "w1")
     hi1 = max(w1.collect(), key=lambda e: (e.op_ts, e.lsn))
     merge_apply(
         r.table(), spark.read.parquet(ws["changes"] + "/w1"),
         job_id="job1", batch_id=1, watermark=(hi1.op_ts, hi1.lsn),
     )
-    # new events land BEFORE the restart -> recomputed window superset
+
+
+def _crash_before_snapshot_json(monkeypatch):
+    from cwds_jobs_spark.table.snapshot import SnapshotTable
+
+    def crash(self, snap):
+        raise OSError("injected crash before the snapshot JSON")
+
+    monkeypatch.setattr(SnapshotTable, "_write_snapshot", crash)
+
+
+def _crash_before_pointer_swap(monkeypatch):
+    import os
+
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if os.path.basename(dst) == "_VERSION":
+            raise OSError("injected crash before the pointer swap")
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash)
+
+
+def _crash_before_savepoint(monkeypatch):
+    def crash(self, container):
+        raise OSError("injected crash before the savepoint write")
+
+    monkeypatch.setattr(st.SavePointService, "write", crash)
+
+
+@pytest.mark.parametrize(
+    "crash, committed",
+    [
+        (None, 1),  # window 1 committed by hand, uncapped rerun
+        (_crash_before_snapshot_json, 0),  # bucket files written, no JSON
+        (_crash_before_pointer_swap, 1),  # JSON linked, _VERSION lags
+        (_crash_before_savepoint, 1),  # committed, savepoint not written
+    ],
+    ids=["hand_commit", "before_json", "before_pointer", "before_savepoint"],
+)
+def test_crash_between_commit_and_savepoint_never_skips_events(
+    spark, ws, monkeypatch, crash, committed
+):
+    """Crash at each commit step of window 1, with new tail files
+    arriving before the restart: the rerun's recomputed window is not
+    the committed one.  The rerun must resume from what the ledger
+    committed (advancing from the recomputed window would silently
+    skip the new events forever), apply only the events not yet
+    applied, and end at the tail's high watermark with the ledger's
+    batch_id."""
+    from cwds_jobs_spark.table.snapshot import SnapshotTable
+
+    w0 = synth_changes(spark, 300, n_convs=10)
+    write_changes_window(w0, ws["changes"], "w0")
+    r = _runner(spark, ws, max_events_per_window=None if crash is None else 40)
+    r.run()  # initial load + cutover; batch_id now 0
+
+    w1 = synth_changes(spark, 100, n_convs=10, start_lsn=300)
+    write_changes_window(w1, ws["changes"], "w1")
+    if crash is None:
+        _hand_commit(spark, ws, r, w1)
+    else:
+        crash(monkeypatch)
+        with pytest.raises(OSError, match="injected"):
+            r.run()
+        monkeypatch.undo()
+    crashed = SnapshotTable.load(spark, ws["table"])
+    assert crashed.committed_batch("job1") == committed
+    wm = crashed.committed_watermark("job1")
+    done = (
+        (dt.datetime.fromisoformat(wm["ts"]), wm["lsn"])
+        if wm else r.sp_svc.read().savepoint.as_tuple()
+    )
+    # new events land BEFORE the restart -> recomputed window differs
     w2 = synth_changes(spark, 50, n_convs=10, start_lsn=400)
     write_changes_window(w2, ws["changes"], "w2")
+    tail = list(w1.collect()) + list(w2.collect())
 
-    out = r.run()  # restart: replayed batch skips, then w2 applies
-    assert out["events"] == 50  # ONLY w2 (w1 was already committed)
-    expected = replay(
-        [e for e in w0.collect() if e.op != "D"]
-        + list(w1.collect())
-        + list(w2.collect())
-    )
+    out = r.run()
+    assert out["events"] == sum((e.op_ts, e.lsn) > done for e in tail)
+    expected = replay([e for e in w0.collect() if e.op != "D"] + tail)
     assert_matches(r.table().read(), expected)
-    # savepoint landed at the true high watermark
-    hi2 = max(w2.collect(), key=lambda e: (e.op_ts, e.lsn))
-    assert r.sp_svc.read().savepoint.as_tuple() == (hi2.op_ts, hi2.lsn)
-    assert r.sp_svc.read().batch_id == 2
+    hi = max(list(w0.collect()) + tail, key=lambda e: (e.op_ts, e.lsn))
+    c = r.sp_svc.read()
+    assert c.savepoint.as_tuple() == (hi.op_ts, hi.lsn)
+    assert c.batch_id == SnapshotTable.load(spark, ws["table"]).committed_batch("job1")
 
 
 def test_vector_watermark_in_ledger_rejected_by_batch_runner(spark, ws):

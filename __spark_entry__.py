@@ -861,7 +861,7 @@ def q_multisource_vector(spark, sf_dir):
     import datetime as _dt
     import tempfile
 
-    from cwds_jobs_spark.streaming.driver import run_multisource_tail_once
+    from cwds_jobs_spark.streaming.driver import run_tail_once
     from cwds_jobs_spark.synth import synth_changes
     from cwds_jobs_spark.table.snapshot import SnapshotTable
 
@@ -875,10 +875,10 @@ def q_multisource_vector(spark, sf_dir):
     ).parquet(pb)
 
     work = tempfile.mkdtemp(prefix="msv_entry_")
-    run_multisource_tail_once(
+    run_tail_once(
         spark,
         job_id="msv",
-        sources={"a": pa, "b": pb},
+        changes_dir={"a": pa, "b": pb},
         table_path=f"{work}/tbl",
         checkpoint_dir=f"{work}/ckpt",
         num_buckets=8,

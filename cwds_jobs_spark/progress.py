@@ -9,12 +9,11 @@ fed by the entities-written counter (util/ConsumerCounter.java:5-27).
 Spark-native surfaces:
 
 - :class:`ProgressReporter` — driver-side counter with the same linear
-  estimator; the batch runner / multisource loop call ``update`` per
-  window.
-- :func:`attach_streaming_progress` — a ``StreamingQueryListener``
-  that feeds the reporter from Structured Streaming's own
-  per-micro-batch progress events (numInputRows), so the streaming
-  driver gets rows/sec + ETA for free, no extra job.
+  estimator.  The batch runner calls ``update`` per window; the stream
+  driver calls it per applied micro-batch, inside ``foreachBatch``
+  after the commit, and writes the snapshot to the ``_progress.json``
+  sidecar next to the lineage rows — so the reported rate never runs
+  ahead of or behind the table state.
 """
 
 from __future__ import annotations
@@ -65,43 +64,3 @@ class ProgressReporter:
             ),
         }
 
-
-def attach_streaming_progress(spark, reporter: ProgressReporter):
-    """Wire the reporter to Structured Streaming progress events.
-
-    Returns the listener (pass to ``spark.streams.removeListener`` to
-    detach).  Uses only public StreamingQueryListener API.
-    """
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _L(StreamingQueryListener):
-        def __init__(self):
-            # max batchId seen per runId: progress batchIds are
-            # monotonic, so this dedups re-delivered events in O(runs)
-            # memory — an unbounded (runId, batchId) set is a slow
-            # driver leak on exactly the long tails this targets
-            self._max_batch: dict = {}
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            try:
-                p = event.progress
-                run, b = str(p.runId), int(p.batchId)
-                if b <= self._max_batch.get(run, -1):
-                    return  # progress events can be re-delivered
-                self._max_batch[run] = b
-                reporter.update(int(p.numInputRows))
-            except Exception:
-                pass  # progress reporting must never fail the query
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = _L()
-    spark.streams.addListener(listener)
-    return listener

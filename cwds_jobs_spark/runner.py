@@ -179,7 +179,7 @@ class CdcJobRunner:
             raise ValueError(
                 f"job_id {self.cfg.job_id!r} has a multi-source vector "
                 "watermark in the table ledger; resume it via streaming."
-                "driver.start_multisource_cdc_stream (or use a fresh "
+                "driver.start_cdc_stream with a dict of tails (or use a fresh "
                 "job_id for single-source batch runs)"
             )
         if wm is not None:

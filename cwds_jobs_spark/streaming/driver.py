@@ -1,11 +1,13 @@
 """Structured Streaming CDC driver: readStream → foreachBatch(MERGE).
 
-The production tail (SURVEY.md §1.4 chose design (a)): the changes
+The production tail (SURVEY.md §1.4 chose design (a)): each changes
 directory is consumed as a file stream; Spark's checkpoint tracks
 consumed files/offsets — the durable savepoint (reference
 SavePointContainerServiceImpl.java analog, but transactional and
-per-source).  Each micro-batch runs the same ``merge_apply`` as the
-batch runner:
+per-source).  One driver, :func:`start_cdc_stream`, takes one tail or
+a ``{source: dir}`` dict of several, unioned into one query
+(reference CapUsersIncrementalUpdatesProcessor.java:26-42).  Each
+micro-batch runs the same ``merge_apply`` as the batch runner:
 
 - ``foreachBatch`` is at-least-once → the snapshot ledger keyed by
   ``(job_id, epoch_id)`` makes the table commit exactly-once (T3);
@@ -20,13 +22,16 @@ batch runner:
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from cwds_jobs_spark.lineage import probe_window
 from cwds_jobs_spark.operators.merge import merge_apply
+from cwds_jobs_spark.progress import ProgressReporter
 from cwds_jobs_spark.schema import TRANSCRIPTS_SCHEMA
 from cwds_jobs_spark.sources.changes import stream_changes
 from cwds_jobs_spark.table.snapshot import SnapshotTable
@@ -63,11 +68,41 @@ def read_progress(lineage_dir: str, job_id: str) -> dict | None:
         return json.load(f)
 
 
+def _source_vector(
+    table: SnapshotTable, job_id: str, sources: dict[str, str], batch: dict
+) -> dict | None:
+    """The per-source watermark vector to commit with a batch.
+
+    A micro-batch may hold files of ONE source only (the trigger's file
+    cap applies per leg) — merge with the committed vector so every
+    source's entry stays present and monotone across batches."""
+    vector = dict(batch)
+    prev = table.committed_watermark(job_id) or {}
+    if "sources" in prev:
+        prev_sources = prev["sources"]
+    elif "ts" in prev:
+        # cross-mode job_id reuse: a prior batch/single-stream run
+        # committed a scalar {ts, lsn} watermark.  Migrate it as a FLOOR
+        # for every source (everything up to it was applied, whichever
+        # tail it came from) instead of silently discarding it and
+        # restarting the vector from scratch.
+        prev_sources = {
+            name: {"ts": prev["ts"], "lsn": prev["lsn"]} for name in sources
+        }
+    else:
+        prev_sources = {}
+    for name, w in prev_sources.items():
+        t = (dt.datetime.fromisoformat(w["ts"]), int(w["lsn"]))
+        if name not in vector or vector[name] < t:
+            vector[name] = t
+    return vector or None
+
+
 def start_cdc_stream(
     spark: SparkSession,
     *,
     job_id: str,
-    changes_dir: str,
+    changes_dir: "str | dict[str, str]",
     table_path: str,
     checkpoint_dir: str,
     lineage_dir: str | None = None,
@@ -78,7 +113,6 @@ def start_cdc_stream(
     on_batch=None,
     maintenance_every: int | None = None,
     allowed_lateness: "dt.timedelta | None" = None,
-    reporter=None,
     total_expected: int | None = None,
 ) -> StreamingQuery:
     """Start (or resume, if the checkpoint exists) the CDC apply stream.
@@ -87,6 +121,18 @@ def start_cdc_stream(
     batch-job flavor with streaming bookkeeping (used by tests and the
     bench).  ``on_batch`` is a hook for fault-injection tests
     (reference BrokenTestEntityService.java:10-25 analog).
+
+    ``changes_dir`` is one tail, or ``{source: dir}`` for several — the
+    streaming shape of the batch savepoint vector (reference
+    AbstractCapUsersJob.java:30-50).  Each source becomes one union leg,
+    tagged with a ``_source`` column; the checkpoint tracks every leg's
+    files independently, so a crash mid-drain resumes every tail with
+    none skipped.  Each source's high watermark, merged with the
+    committed vector (a scalar watermark left under the job_id becomes
+    every source's floor), is committed with the ledger entry, readable
+    via ``SnapshotTable.committed_watermark`` as ``{"sources": {name:
+    {"ts", "lsn"}}}``.  It is bookkeeping here; for the batch driver it
+    is the read filter.  A single tail records no ledger watermark.
 
     ``maintenance_every=K`` purges tombstones whose version is older
     than ``max(op_ts) - allowed_lateness`` of the batch (default
@@ -100,27 +146,54 @@ def start_cdc_stream(
     buckets fragmented past 4 file groups and vacuums old commits.
     Each purge is an atomic snapshot commit, so a crash
     mid-maintenance is invisible to readers.  Without
-    ``maintenance_every`` every tombstone is kept.
+    ``maintenance_every`` every tombstone is kept.  It is refused
+    (``ValueError``) for several tails: over a union the bound is
+    anchored at the fastest tail and could drop a tombstone that a
+    lagging tail's stale insert must still lose to.
 
     Progress (reference C4, JobTimeReport/TimeLeftEstimationProvider
     analog) is ON BY DEFAULT when ``lineage_dir`` is set: each applied
     batch feeds a :class:`~cwds_jobs_spark.progress.ProgressReporter`
-    (pass ``total_expected`` for ETA, or a pre-built ``reporter``) and
-    the snapshot — events, events/sec, ETA — is written atomically to
+    (pass ``total_expected`` for ETA) and the snapshot — events,
+    events/sec, ETA — is written atomically to
     ``<lineage_dir>/job=<job_id>/_progress.json`` next to the lineage
-    rows.  The feed is synchronous with the batch commit (not the
-    async StreamingQueryListener path, which remains available via
-    ``progress.attach_streaming_progress`` for external monitors), so
-    the file never lags the table state.
-    """
-    from cwds_jobs_spark.progress import ProgressReporter
+    rows.  The feed is synchronous with the batch commit, so the file
+    never lags the table state.
 
-    reporter = reporter or ProgressReporter(total_expected=total_expected)
+    Schema evolution (reference analog: per-job index mapping swap,
+    ElasticsearchService.java:74-91): a file stream's schema is fixed at
+    query start, so a column added mid-stream is invisible until restart
+    with the evolved ``schema``.  Every leg reads with it (parquet
+    null-fills older files, so a lagging source keeps working), and the
+    first merged batch evolves the table like the batch path
+    (``tests/test_schema_evolution.py``); old buckets are not rewritten.
+    """
+    sources = changes_dir if isinstance(changes_dir, dict) else None
+    if sources is not None and maintenance_every:
+        raise ValueError(
+            "maintenance_every is not supported with several tails: the "
+            "purge bound over a union is anchored at the fastest tail"
+        )
+    reporter = ProgressReporter(total_expected=total_expected)
     table = SnapshotTable.open(spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets)
 
-    src = stream_changes(
-        spark, changes_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
+    def leg(cdir: str):
+        return stream_changes(
+            spark, cdir, schema=schema, max_files_per_trigger=max_files_per_trigger
+        )
+
+    if sources is None:
+        src, source_col = leg(changes_dir), None
+    else:
+        # allowMissingColumns: legs normally share the passed schema,
+        # but if a caller wires per-source schemas (or a future reader
+        # infers them), a leg missing a newly added column must widen
+        # with nulls — the CDC union contract — not fail the query
+        src = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [leg(d).withColumn("_source", F.lit(n)) for n, d in sources.items()],
+        )
+        source_col = "_source"
     lateness = allowed_lateness or dt.timedelta(hours=1)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
@@ -132,7 +205,7 @@ def start_cdc_stream(
         # the file source being scanned twice per micro-batch
         batch_df = batch_df.persist()
         try:
-            probe = probe_window(batch_df, table.bucket_of())
+            probe = probe_window(batch_df, table.bucket_of(), source_col=source_col)
             # the bound maintenance purges below, applied while the merge
             # rewrites the window's buckets anyway
             purge_before = (
@@ -140,12 +213,17 @@ def start_cdc_stream(
                 if maintenance_every and probe.high is not None
                 else None
             )
+            rows, watermark = batch_df, None
+            if sources is not None:
+                rows = batch_df.drop(source_col)
+                watermark = _source_vector(table, job_id, sources, probe.sources)
             stats = merge_apply(
                 table,
-                batch_df,
+                rows,
                 job_id=job_id,
                 batch_id=epoch_id,
                 lineage_dir=lineage_dir,
+                watermark=watermark,
                 probe=probe,
                 purge_before=purge_before,
             )
@@ -184,154 +262,24 @@ def start_cdc_stream(
     return writer.start()
 
 
-def start_multisource_cdc_stream(
-    spark: SparkSession,
-    *,
-    job_id: str,
-    sources: dict[str, str],
-    table_path: str,
-    checkpoint_dir: str,
-    lineage_dir: str | None = None,
-    num_buckets: int = 32,
-    schema: T.StructType | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = False,
-    on_batch=None,
-) -> StreamingQuery:
-    """Union of several change tails in ONE streaming query.
-
-    The streaming shape of the batch savepoint vector
-    (``multisource.run_multisource_incremental``; reference
-    AbstractCapUsersJob.java:30-50): each source directory becomes one
-    union leg of a single ``readStream``, and Spark's checkpoint
-    tracks every leg's consumed files INDEPENDENTLY in the offset log
-    — a crash mid-drain resumes both tails with neither skipped.  The
-    ledger vector recorded below is bookkeeping here; for the batch
-    driver it is the read filter.
-
-    Each leg is tagged with a ``_source`` column.  ``foreachBatch``
-    probes the persisted batch once with ``_source`` in the window
-    probe's grouping, which gives the lineage rows, affected buckets
-    and count as for one source plus the per-source high watermarks,
-    and records those watermarks atomically
-    WITH the ledger entry — per-source watermark columns in the
-    ledger, readable via ``SnapshotTable.committed_watermark`` as
-    ``{"sources": {name: {"ts", "lsn"}}}``.
-
-    Exactly-once is unchanged: at-least-once ``foreachBatch`` × the
-    ``(job_id, epoch_id)`` ledger inside ``merge_apply``; a replayed
-    epoch is a table no-op and leaves the recorded vector put.
-
-    Schema evolution contract (reference analog: per-job index mapping
-    swap, ElasticsearchService.java:74-91): a file stream's schema is
-    FIXED at query start, so a column added to one source's tail
-    mid-stream is invisible until restart — same as the single-source
-    path.  On restart, pass the evolved ``schema``: every leg reads
-    with it (parquet null-fills files that predate the column, so a
-    LAGGING source keeps working unchanged), the union is widened with
-    ``allowMissingColumns=True`` as defense-in-depth, and the first
-    merged batch evolves the table schema exactly like the batch path
-    (``tests/test_schema_evolution.py``); old buckets are not
-    rewritten.  Tested in ``tests/test_multisource_streaming.py``
-    (two-source evolution: one source evolves, the other lags).
-    """
-    table = SnapshotTable.open(spark, table_path, TRANSCRIPTS_SCHEMA, num_buckets)
-
-    from pyspark.sql import functions as F
-
-    legs = [
-        stream_changes(
-            spark, cdir, schema=schema, max_files_per_trigger=max_files_per_trigger
-        ).withColumn("_source", F.lit(name))
-        for name, cdir in sources.items()
-    ]
-    src = legs[0]
-    for leg in legs[1:]:
-        # allowMissingColumns: legs normally share the passed schema,
-        # but if a caller wires per-source schemas (or a future reader
-        # infers them), a leg missing a newly added column must widen
-        # with nulls — the CDC union contract — not fail the query
-        src = src.unionByName(leg, allowMissingColumns=True)
-
-    def apply_batch(batch_df, epoch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_df, epoch_id)
-        batch_df = batch_df.persist()
-        try:
-            # one aggregate: lineage rows, buckets, count and the
-            # per-source high watermarks
-            probe = probe_window(batch_df, table.bucket_of(), source_col="_source")
-            vector = dict(probe.sources)
-            # a micro-batch may hold files of ONE source only (the
-            # trigger's file cap applies per leg) — merge with the
-            # committed vector so every source's entry stays present
-            # and monotone across batches
-            prev = table.committed_watermark(job_id) or {}
-            if "sources" in prev:
-                prev_sources = prev["sources"]
-            elif "ts" in prev:
-                # cross-mode job_id reuse: a prior batch/single-stream
-                # run committed a scalar {ts, lsn} watermark.  Migrate
-                # it as a FLOOR for every source (everything up to it
-                # was applied, whichever tail it came from) instead of
-                # silently discarding it and restarting the vector
-                # from scratch.
-                prev_sources = {
-                    name: {"ts": prev["ts"], "lsn": prev["lsn"]}
-                    for name in sources
-                }
-            else:
-                prev_sources = {}
-            for name, w in prev_sources.items():
-                t = (dt.datetime.fromisoformat(w["ts"]), int(w["lsn"]))
-                if name not in vector or vector[name] < t:
-                    vector[name] = t
-            merge_apply(
-                table,
-                batch_df.drop("_source"),
-                job_id=job_id,
-                batch_id=epoch_id,
-                lineage_dir=lineage_dir,
-                watermark=vector or None,
-                probe=probe,
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(f"cdc-multi-{job_id}")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def run_multisource_tail_once(
-    spark: SparkSession, timeout_sec: float = 300.0, **kw
-) -> None:
-    """Drain all sources' pending tails (availableNow) and wait."""
-    q = start_multisource_cdc_stream(spark, available_now=True, **kw)
-    _await(q, timeout_sec)
-
-
 def run_tail_once(spark: SparkSession, timeout_sec: float = 300.0, **kw) -> None:
-    """Drain the pending tail (availableNow) and wait for completion."""
+    """Drain the pending tail(s) (availableNow) and wait for completion.
+
+    The query is stopped on every exit.  A failed query raises
+    ``RuntimeError``; one still draining after ``timeout_sec`` raises
+    ``TimeoutError`` — a half-drained tail is not a success."""
     q = start_cdc_stream(spark, available_now=True, **kw)
-    _await(q, timeout_sec)
-
-
-def _await(q: StreamingQuery, timeout_sec: float) -> None:
-    err = None
+    err, done = None, False
     try:
-        q.awaitTermination(timeout_sec)
+        done = q.awaitTermination(timeout_sec)
     except Exception as e:  # StreamingQueryException → uniform RuntimeError
         err = e
     finally:
         if q.isActive:
             q.stop()
-    if err is None and q.exception() is not None:
+    if err is None:
         err = q.exception()
     if err is not None:
         raise RuntimeError(str(err))
+    if not done:
+        raise TimeoutError(f"query {q.name!r} still draining after {timeout_sec}s")

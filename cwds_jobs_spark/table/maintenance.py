@@ -115,19 +115,3 @@ def vacuum(table: SnapshotTable, keep_snapshots: int = 2) -> dict:
         "removed_snapshots": removed_snaps,
     }
 
-
-def table_file_stats(table: SnapshotTable) -> dict:
-    """Operational metrics: files, bytes, buckets — lineage-table feed."""
-    counts = bucket_file_counts(table)
-    total_bytes = 0
-    for e in table._snap["buckets"].values():
-        for f in e["files"]:
-            p = os.path.join(table.path, f)
-            if os.path.exists(p):
-                total_bytes += os.path.getsize(p)
-    return {
-        "buckets": len(counts),
-        "files": sum(counts.values()),
-        "max_files_in_bucket": max(counts.values(), default=0),
-        "bytes": total_bytes,
-    }

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from cwds_jobs_spark.lineage import read_lineage
 from cwds_jobs_spark.oracle import assert_matches, replay
 from cwds_jobs_spark.sources.changes import write_changes_window
-from cwds_jobs_spark.streaming.driver import run_multisource_tail_once
+from cwds_jobs_spark.streaming.driver import run_tail_once, start_cdc_stream
 from cwds_jobs_spark.synth import synth_changes
 from cwds_jobs_spark.table.snapshot import SnapshotTable
 
@@ -30,7 +30,7 @@ def dirs(ws):
 def _kw(ws, dirs, **over):
     kw = dict(
         job_id="msjob",
-        sources=dirs,
+        changes_dir=dirs,
         table_path=ws["table"],
         checkpoint_dir=ws["checkpoint"],
         lineage_dir=ws["lineage"],
@@ -46,7 +46,7 @@ def test_two_tails_one_query_matches_replay(spark, ws, dirs):
     wb = synth_changes(spark, 300, n_convs=12, start_lsn=400)
     write_changes_window(wa, dirs["a"], "w0")
     write_changes_window(wb, dirs["b"], "w0")
-    run_multisource_tail_once(spark, **_kw(ws, dirs))
+    run_tail_once(spark, **_kw(ws, dirs))
 
     tbl = SnapshotTable.load(spark, ws["table"])
     assert_matches(tbl.read(), replay(list(wa.collect()) + list(wb.collect())))
@@ -56,6 +56,15 @@ def test_two_tails_one_query_matches_replay(spark, ws, dirs):
     hb = max(wb.collect(), key=lambda e: (e.op_ts, e.lsn))
     assert wm["a"] == {"ts": ha.op_ts.isoformat(), "lsn": ha.lsn}
     assert wm["b"] == {"ts": hb.op_ts.isoformat(), "lsn": hb.lsn}
+
+
+def test_several_tails_refuse_maintenance(spark, ws, dirs):
+    """The purge bound over a union is anchored at the fastest tail, so
+    several tails refuse ``maintenance_every`` before the query starts."""
+    with pytest.raises(ValueError, match="maintenance_every"):
+        start_cdc_stream(spark, maintenance_every=1, **_kw(ws, dirs))
+    assert not os.path.exists(ws["checkpoint"])
+    assert not os.path.exists(ws["table"])
 
 
 def test_kill_mid_drain_restart_skips_neither_source(spark, ws, dirs):
@@ -80,14 +89,14 @@ def test_kill_mid_drain_restart_skips_neither_source(spark, ws, dirs):
         state["applied"] += 1
 
     with pytest.raises(RuntimeError):
-        run_multisource_tail_once(
+        run_tail_once(
             spark, max_files_per_trigger=1, on_batch=die_after_first,
             **_kw(ws, dirs),
         )
     tbl = SnapshotTable.load(spark, ws["table"])
     assert tbl.read().count() < len(replay(all_events))  # genuinely mid-drain
 
-    run_multisource_tail_once(spark, max_files_per_trigger=1, **_kw(ws, dirs))
+    run_tail_once(spark, max_files_per_trigger=1, **_kw(ws, dirs))
     tbl = SnapshotTable.load(spark, ws["table"])
     assert_matches(tbl.read(), replay(all_events))
     # every event from both sources applied exactly once
@@ -108,11 +117,11 @@ def test_new_files_in_one_source_only(spark, ws, dirs):
     wb = synth_changes(spark, 200, n_convs=10, start_lsn=200)
     write_changes_window(wa, dirs["a"], "w0")
     write_changes_window(wb, dirs["b"], "w0")
-    run_multisource_tail_once(spark, **_kw(ws, dirs))
+    run_tail_once(spark, **_kw(ws, dirs))
 
     wb1 = synth_changes(spark, 150, n_convs=10, start_lsn=400)
     write_changes_window(wb1, dirs["b"], "w1")
-    run_multisource_tail_once(spark, **_kw(ws, dirs))
+    run_tail_once(spark, **_kw(ws, dirs))
 
     tbl = SnapshotTable.load(spark, ws["table"])
     assert_matches(
@@ -150,7 +159,7 @@ def test_legacy_scalar_watermark_becomes_vector_floor(spark, ws, dirs):
     tbl.record_ledger(
         "msjob", -1, watermark={"ts": floor_ts.isoformat(), "lsn": 777}
     )
-    run_multisource_tail_once(spark, **_kw(ws, dirs))
+    run_tail_once(spark, **_kw(ws, dirs))
     tbl = SnapshotTable.load(spark, ws["table"])
     wm = tbl.committed_watermark("msjob")["sources"]
     assert wm["a"] == {"ts": floor_ts.isoformat(), "lsn": 777}
@@ -183,7 +192,7 @@ def test_two_source_evolution_one_source_lags(spark, ws, dirs):
     wb0 = synth_changes(spark, 200, n_convs=15, start_lsn=200, with_tool_col=False)
     write_changes_window(wa0, dirs["a"], "w0")
     write_changes_window(wb0, dirs["b"], "w0")
-    run_multisource_tail_once(
+    run_tail_once(
         spark, schema=CHANGES_SCHEMA_V0, **_kw(ws, dirs)
     )
     tbl = SnapshotTable.load(spark, ws["table"])
@@ -195,7 +204,7 @@ def test_two_source_evolution_one_source_lags(spark, ws, dirs):
     write_changes_window(wa1, dirs["a"], "w1")
     write_changes_window(wb1, dirs["b"], "w1")
     # restart from the SAME checkpoint with the merged schema
-    run_multisource_tail_once(spark, schema=CHANGES_SCHEMA, **_kw(ws, dirs))
+    run_tail_once(spark, schema=CHANGES_SCHEMA, **_kw(ws, dirs))
 
     tbl = SnapshotTable.load(spark, ws["table"])
     out = tbl.read()

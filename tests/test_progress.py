@@ -3,7 +3,9 @@ TimeLeftEstimationProvider analogs)."""
 
 import os
 
-from cwds_jobs_spark.progress import ProgressReporter, attach_streaming_progress
+import pytest
+
+from cwds_jobs_spark.progress import ProgressReporter
 from cwds_jobs_spark.synth import synth_changes
 
 
@@ -43,38 +45,6 @@ def test_reporter_without_total():
     assert snap["events"] == 10
 
 
-def test_streaming_listener_feeds_reporter(spark, ws):
-    """attach_streaming_progress counts the CDC stream's input rows."""
-    import time
-
-    from cwds_jobs_spark.streaming.driver import run_tail_once
-
-    n = 400
-    synth_changes(spark, n, n_convs=10).write.mode("overwrite").parquet(
-        os.path.join(ws["changes"], "w0")
-    )
-    rep = ProgressReporter(total_expected=n)
-    listener = attach_streaming_progress(spark, rep)
-    try:
-        run_tail_once(
-            spark,
-            job_id="prog",
-            changes_dir=ws["changes"],
-            table_path=ws["table"],
-            checkpoint_dir=ws["checkpoint"],
-            num_buckets=4,
-        )
-        # listener delivery is async; give it a moment
-        for _ in range(50):
-            if rep.events >= n:
-                break
-            time.sleep(0.2)
-    finally:
-        spark.streams.removeListener(listener)
-    assert rep.events == n
-    assert rep.snapshot()["events_per_sec"] > 0
-
-
 def test_runner_incremental_reports_rate(spark, ws):
     from cwds_jobs_spark.runner import CdcJobRunner, JobConfig, ensure_dirs
 
@@ -99,20 +69,27 @@ def test_runner_incremental_reports_rate(spark, ws):
     assert out["events_per_sec"] > 0
 
 
-def test_streaming_driver_writes_progress_sidecar_by_default(spark, ws):
+@pytest.mark.parametrize("tails", [1, 2], ids=["one_tail", "two_tails"])
+def test_streaming_driver_writes_progress_sidecar_by_default(spark, ws, tails):
     """C4 default-on: a drain with lineage_dir set leaves a rate/ETA
     snapshot at <lineage>/job=<id>/_progress.json, fed synchronously
-    from the applied-batch lineage stats."""
+    from the applied-batch lineage stats — for one tail or a dict of
+    several."""
     from cwds_jobs_spark.sources.changes import write_changes_window
     from cwds_jobs_spark.streaming.driver import read_progress, run_tail_once
-    from cwds_jobs_spark.synth import synth_changes
 
-    ev = synth_changes(spark, 400, n_convs=10)
-    write_changes_window(ev, ws["changes"], "w0")
+    if tails == 1:
+        changes_dir = ws["changes"]
+        write_changes_window(synth_changes(spark, 400, n_convs=10), changes_dir, "w0")
+    else:
+        changes_dir = {s: os.path.join(ws["changes"], s) for s in ("a", "b")}
+        for i, d in enumerate(changes_dir.values()):
+            ev = synth_changes(spark, 200, n_convs=10, start_lsn=200 * i)
+            write_changes_window(ev, d, "w0")
     run_tail_once(
         spark,
         job_id="pjob",
-        changes_dir=ws["changes"],
+        changes_dir=changes_dir,
         table_path=ws["table"],
         checkpoint_dir=ws["checkpoint"],
         lineage_dir=ws["lineage"],

@@ -134,3 +134,20 @@ def test_stream_maintenance_purges_tombstones(spark, ws):
     assert stale.count() == 0
     # w1-era tombstones inside the lateness window survive
     assert internal.filter(F.col(TOMBSTONE)).count() > 0
+
+
+def test_timed_out_drain_raises_and_stops_the_query(spark, ws, monkeypatch):
+    """A drain still running at ``timeout_sec`` is not a success: the
+    query is stopped and ``run_tail_once`` raises ``TimeoutError``."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    queries = []
+
+    def timed_out(self, timeout=None):
+        queries.append(self)
+        return False  # what awaitTermination(timeout) returns on timeout
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", timed_out)
+    with pytest.raises(TimeoutError, match="cdc-sjob"):
+        run_tail_once(spark, timeout_sec=5, **_kw(ws))
+    assert len(queries) == 1 and not queries[0].isActive
